@@ -212,6 +212,94 @@ def _input_cols(aggs: dict) -> list[str]:
     return sorted({c for _fn, c in aggs.values() if c != "*"})
 
 
+def _change_frames(src: str, lo: int, hi: int, cols: Sequence[str]):
+    olds, news = [], []
+    for v in range(lo + 1, hi + 1):
+        o, n = tx.commit_change_rows(src, v, [], cols, frames=True)
+        if not o.empty:
+            olds.append(o)
+        if not n.empty:
+            news.append(n)
+    return olds, news
+
+
+#: changed-row estimate above which a refresh builds its delta from
+#: the EXECUTOR-PARALLEL feed reader instead of driver pandas (VERDICT
+#: r10 item 3).  The driver path is right for steady micro-batch
+#: deltas (it skips a Spark job per side); a backfill-scale commit
+#: would pressure the driver with O(changed rows) pandas, so past this
+#: bound the rows flow executor-side (``txfeed.tx_change_rows_dist``)
+#: and the driver holds only commit metadata.  Tests monkeypatch it.
+DIST_DELTA_ROWS = 200_000
+
+
+def _estimated_change_rows(src: str, lo: int, hi: int) -> int:
+    """Metadata-only upper-bound estimate of the change window's row
+    volume: added rows from each commit's own file stats, removed rows
+    from the pre-commit snapshot's stats (DV deltas ride the same
+    commits and are strictly smaller).  O(commits) log reads, no data
+    touched.  A file with missing/empty stats has UNKNOWN size — it
+    counts as over-threshold (``DIST_DELTA_ROWS + 1``) rather than 0,
+    so an unknown-size backfill takes the executor-parallel path
+    instead of silently landing in driver pandas (ADVICE r11)."""
+    def _file_rows(fstats: dict | None) -> int | None:
+        # "rows" lives inside each column's stat record
+        if not fstats:
+            return None  # unknown: stats absent for this file
+        return max(
+            (int(cs.get("rows", 0) or 0) for cs in fstats.values()),
+            default=0,
+        )
+
+    total = 0
+    for v in range(lo + 1, hi + 1):
+        c = tx._read_commit(src, v)
+        st = c.stats or {}
+        for f in c.add:
+            n = _file_rows(st.get(f))
+            if n is None:
+                return DIST_DELTA_ROWS + 1
+            total += n
+        if c.remove:
+            prev = tx.snapshot(src, v - 1)
+            pst = (prev.stats or {}) if prev is not None else {}
+            for f in c.remove:
+                n = _file_rows(pst.get(f))
+                if n is None:
+                    return DIST_DELTA_ROWS + 1
+                total += n
+    return total
+
+
+def _weighted_delta_rows(
+    spark: SparkSession, src: str, lo: int, hi: int, cols: Sequence[str]
+) -> DataFrame | None:
+    """The change window's row multisets as ONE weighted frame
+    (removed −1 / added +1), or None when nothing changed.  Small
+    windows concatenate driver-side pandas (no job); windows past
+    :data:`DIST_DELTA_ROWS` build executor-parallel."""
+    import pandas as pd
+
+    if hi <= lo:
+        return None
+    if _estimated_change_rows(src, lo, hi) > DIST_DELTA_ROWS:
+        from event_streaming_toy_example_spark.sources.txfeed import (
+            tx_change_rows_dist,
+        )
+
+        return tx_change_rows_dist(spark, src, lo, hi, cols)
+    olds, news = _change_frames(src, lo, hi, cols)
+    if not olds and not news:
+        return None
+    pieces = []
+    for dfs, w in ((olds, -1), (news, 1)):
+        for f in dfs:
+            f = f.copy()
+            f["__w"] = w
+            pieces.append(f)
+    return spark.createDataFrame(pd.concat(pieces, ignore_index=True))
+
+
 def tx_create_matview(
     spark: SparkSession,
     src: str,
@@ -294,9 +382,7 @@ def tx_refresh_matview(spark: SparkSession, dst: str) -> int | None:
     # pandas for steady micro-batch deltas, EXECUTOR-PARALLEL past the
     # DIST_DELTA_ROWS estimate so a backfill-scale commit never
     # materializes on the driver (VERDICT r10 item 3; shared with the
-    # join matviews)
-    from .matview_join import _weighted_delta_rows
-
+    # star matviews)
     wdf = _weighted_delta_rows(spark, src, applied, cur, cols)
     if wdf is None:
         # metadata-only commits: just advance the watermark

@@ -1,6 +1,6 @@
 """Incrementally-maintained MATERIALIZED VIEWS over an N-WAY STAR
-equi-join (VERDICT r10 item 2 — the recursive/DBToaster extension of
-``operators/matview_join.py``'s two-sided factorization).
+equi-join (VERDICT r10 item 2).  A two-table join view is the
+one-dimension star: ``fact = a`` and one dim ``b``.
 
 ``tx_create_matview_star`` materializes
 
@@ -24,8 +24,9 @@ Every distributive aggregate factors through the star's keys::
     sum(f.x)(g...)   = Σ_k  sum_f_x · Π_i cnt_i
     sum(d_j.y)(g...) = Σ_k  cnt_f · sum_j_y · Π_{i≠j} cnt_i
 
-so a refresh is the telescoping N-term delta (sides ordered fact,
-d1, ..., dn; primed = post-delta)::
+(a column ``count`` factors as cntnn · Π cnt, the same shape), so a
+refresh is the telescoping N-term delta (sides ordered fact, d1, ...,
+dn; primed = post-delta)::
 
     Δview = ΔSF ⋈ S1 ⋈ ... ⋈ Sn
           + SF′ ⋈ ΔS1 ⋈ S2 ⋈ ... ⋈ Sn
@@ -33,10 +34,13 @@ d1, ..., dn; primed = post-delta)::
           + ...
 
 with each ΔSi built from commit change frames alone (removed rows
-weigh −1, added +1).  Work per refresh: O(changed rows) for the
-deltas, one keyed join of each (small, broadcast) delta against the
-other sides' metadata-scale states, one O(affected groups) MERGE.
-No source table is ever opened — the catalog entry spy-asserts it.
+weigh −1, added +1; a rewritten-but-unchanged row cancels).  Work per
+refresh: O(changed rows) for the deltas, one keyed join of each
+(small, broadcast) delta against the other sides' metadata-scale
+states, one O(affected groups) MERGE.  No source table is ever
+opened — the catalog entries spy-assert it.  NULL join keys never
+join and are excluded from the states; NULL group keys are refused
+like the single-table matview.
 
 Pre-join FILTERS: each side may declare a SQL predicate in the view
 spec; it applies to the side's rows at create AND to its change
@@ -50,17 +54,19 @@ one monotone token with ``60 // n_sides`` bits per side (a refresh
 advances at least one side, so the pack strictly increases; versions
 beyond the per-side cap raise BY NAME — the documented trade for
 riding the engine's integer stream-transaction floors).  The view
-MERGE lands first, then each state, all under the same token; the
+MERGE lands first, then each state, all under the same token, and the
+view merge always computes against the PRE-refresh states.  The
 repair pass re-runs exactly the missing suffix after a crash.
 
-``min``/``max`` (round 12, like the two-sided module) switch the
-refresh to RECOMPUTE-AFFECTED-GROUPS mode: per-cell extrema in the
-side states merge monotonically for append-only windows (O(delta),
-source-free), removal-touched cells pay a bounded per-cell source
-rescan, and the reachable view groups recompute from the post-delta
-states with the create-time expression.  The reference has
-nothing comparable; the algorithm is the standard higher-order
-DBToaster delta re-expressed on this engine's commit log.
+``min``/``max`` (round 12) switch the refresh to
+RECOMPUTE-AFFECTED-GROUPS mode: per-cell extrema in the side states
+merge monotonically for append-only windows (O(delta), source-free),
+removal-touched cells pay a bounded per-cell source rescan (a
+retracted extremum cannot be repaired from a (min, max) pair), and
+the reachable view groups recompute from the post-delta states with
+the create-time expression.  The reference has nothing comparable;
+the algorithm is the standard factorized-IVM / DBToaster higher-order
+delta re-expressed on this engine's commit log.
 """
 
 from __future__ import annotations
@@ -71,17 +77,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import txtable as tx
-from .matview_join import (
-    _has_minmax,
-    _key_ok,
-    _merge_states,
-    _mm_cols,
-    _mm_products,
-    _state_aggs,
-    _tagged,
-    _weighted_delta_rows,
-    _z,
-)
+from .matview import _weighted_delta_rows
 
 _APP = "matview_star"
 
@@ -114,8 +110,8 @@ def _unpack(token: int, n: int, bits: int) -> list[int]:
 def _parse_star_aggs(aggs: dict, sides: Sequence[str]) -> dict:
     """{out: (fn, side, col)} with fn in count/sum/avg/min/max;
     count('*') carries side None; side must be a declared side name.
-    min/max (round 12) switch the refresh to the same
-    recompute-affected-groups mode the two-sided module uses."""
+    min/max (round 12) switch the refresh to the
+    recompute-affected-groups mode."""
     out: dict = {}
     for name, (fn, ref) in aggs.items():
         if fn == "count" and ref == "*":
@@ -140,6 +136,100 @@ def _side_cols(parsed: dict, side: str) -> list[str]:
         c for fn, s, c in parsed.values()
         if s == side and fn in ("count", "sum", "avg")
     })
+
+
+def _mm_cols(parsed: dict, side: str) -> list[str]:
+    """Columns of ``side`` needing per-cell extrema in the state."""
+    return sorted({
+        c for fn, s, c in parsed.values()
+        if s == side and fn in ("min", "max")
+    })
+
+
+def _has_minmax(parsed: dict) -> bool:
+    return any(fn in ("min", "max") for fn, _s, _c in parsed.values())
+
+
+def _state_aggs(cols: Sequence[str], mm_cols: Sequence[str]):
+    """The per-(key, group) summary a side's state carries.
+    ``mm_cols`` adds per-cell extrema for min/max view aggregates."""
+    exprs = [F.count(F.lit(1)).cast("long").alias("__cnt")]
+    for c in cols:
+        exprs.append(F.sum(c).alias(f"__sum_{c}"))
+        exprs.append(F.count(c).cast("long").alias(f"__cntnn_{c}"))
+    for c in mm_cols:
+        exprs.append(F.min(c).alias(f"__min_{c}"))
+        exprs.append(F.max(c).alias(f"__max_{c}"))
+    return exprs
+
+
+def _key_ok(on: Sequence[str]):
+    pred = None
+    for k in on:
+        p = F.col(k).isNotNull()
+        pred = p if pred is None else (pred & p)
+    return pred
+
+
+def _tagged(df: DataFrame, keys: Sequence[str], tag: str) -> DataFrame:
+    """Suffix every non-key column with ``_<tag>`` so the sides'
+    summary columns coexist after the key joins."""
+    return df.select(
+        *keys,
+        *[
+            F.col(c).alias(f"{c}_{tag}")
+            for c in df.columns
+            if c not in keys
+        ],
+    )
+
+
+def _z(c: str):
+    return F.coalesce(F.col(c), F.lit(0))
+
+
+def _star_join(sides: Sequence[dict], rels: dict) -> DataFrame:
+    """Join one relation per side (states, deltas or changed cells)
+    through the fact relation's keys, each side's summary columns
+    tagged with its name."""
+    joined = _tagged(
+        rels["fact"], sides[0]["keys"] + sides[0]["group"], "fact"
+    )
+    for t in sides[1:]:
+        joined = joined.join(
+            _tagged(rels[t["name"]], t["keys"] + t["group"], t["name"]),
+            t["keys"],
+        )
+    return joined
+
+
+def _mm_products(parsed: dict):
+    """Per-joined-(key, groups) extremum contributions: a min/max over
+    the view group is insensitive to the OTHER sides' multiplicity, so
+    each joined key tuple contributes its own side's cell extremum
+    verbatim (the inner join already guarantees every other side has
+    at least one row)."""
+    return [
+        F.col(f"__{fn}_{col}_{side}").alias(f"__d_{fn}_{name}")
+        for name, (fn, side, col) in parsed.items()
+        if fn in ("min", "max")
+    ]
+
+
+def _merge_states(old: DataFrame, delta: DataFrame | None,
+                  keys: Sequence[str]) -> DataFrame:
+    """S_old ⊎ ΔS (per key+group sums) — an EXPRESSION over the
+    stored state, not a table write, so the view merge can use the
+    post-delta side while the stored state is still pre-refresh."""
+    if delta is None:
+        return old
+    val_cols = [c for c in old.columns if c not in keys]
+    return (
+        old.unionByName(delta)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in val_cols])
+        .where(F.col("__cnt") > 0)
+    )
 
 
 def _on_pairs(on) -> list[tuple[str, str]]:
@@ -233,8 +323,8 @@ def _group_rollup_star(
     side_names: Sequence[str],
 ) -> DataFrame:
     """FULL per-group view rows from a join of every side's state —
-    shared by create and the minmax-mode refresh recompute (the star
-    twin of matview_join._group_rollup)."""
+    shared by create and the minmax-mode refresh recompute, so the
+    two can never drift."""
     per_group = _sum_deltas_star(
         joined.select(
             *all_groups,
@@ -423,22 +513,6 @@ def tx_create_matview_star(
             ),
             state_paths[d["name"]],
         )
-    joined = _tagged(
-        tx.read_table(spark, state_paths["fact"]),
-        fact_keys + group_by_fact,
-        "fact",
-    )
-    for d in dims:
-        keys = [fc for fc, _dc in d["on"]]
-        joined = joined.join(
-            _tagged(
-                tx.read_table(spark, state_paths[d["name"]]),
-                keys + d["group_by"],
-                d["name"],
-            ),
-            keys,
-        )
-    view = _group_rollup_star(joined, all_groups, parsed, sides)
     spec = {
         "fact": os.path.abspath(fact),
         "state_fact": os.path.abspath(state_paths["fact"]),
@@ -458,6 +532,11 @@ def tx_create_matview_star(
         "bases": versions,
         "bits": bits,
     }
+    joined = _star_join(
+        _side_defs(spec),
+        {s: tx.read_table(spark, st) for s, st in state_paths.items()},
+    )
+    view = _group_rollup_star(joined, all_groups, parsed, sides)
     return tx.tx_append(view, dst, properties={"__matview_star": spec})
 
 
@@ -561,12 +640,14 @@ def _delta_state_star(
     state_schema,
     sdf: DataFrame | None = None,
 ) -> DataFrame | None:
-    """Signed per-(key, group) summary of one side's change window —
-    the star twin of matview_join's _delta_state, adding the dim
-    column RENAME (feed columns carry source names) and the side's
-    pre-join filter.  The weighted rows come from the shared two-path
-    builder (driver pandas for steady deltas, executor-parallel past
-    DIST_DELTA_ROWS), or from a prebuilt ``sdf``."""
+    """Signed per-(key, group) summary of one side's change window,
+    dim columns renamed to their fact names and the side's pre-join
+    filter applied.  Output columns are cast to the state table's
+    types so delta arithmetic can never drift the schema (pandas
+    upcasts nullable ints to float).  The weighted rows come from the
+    shared two-path builder (driver pandas for steady deltas,
+    executor-parallel past DIST_DELTA_ROWS), or from a prebuilt
+    ``sdf``."""
     if sdf is None:
         sdf = _sdf_star(spark, side, lo, hi, cols_agg, filt)
     if sdf is None:
@@ -598,11 +679,11 @@ def _new_state_star_mm(
     old: DataFrame,
 ) -> tuple[DataFrame, DataFrame | None]:
     """(post-window state expression, canonicalized weighted rows or
-    None) for one side of a minmax star view — the star twin of
-    matview_join._new_state_mm: sums merge algebraically, extrema
-    merge monotonically from added rows, removal-touched cells
-    recompute from the side's source at the window end (projected,
-    renamed, and filtered exactly like create)."""
+    None) for one side of a minmax star view: sums merge
+    algebraically, extrema merge monotonically from added rows,
+    removal-touched cells recompute from the side's source at the
+    window end (projected, renamed, and filtered exactly like create)
+    — per CELL (key + group), never per table."""
     keys = list(side["keys"]) + list(side["group"])
     sdf = _sdf_star(
         spark, side, lo, hi, sorted(set(sum_cols) | set(mm_cols)), filt
@@ -709,19 +790,6 @@ def _refresh_minmax_star(
         _advance_states(spark, spec, sides, parsed, filters, token)
         return v
 
-    def _star_join(rels: dict) -> DataFrame:
-        joined = _tagged(
-            rels["fact"], sides[0]["keys"] + sides[0]["group"], "fact"
-        )
-        for t in sides[1:]:
-            joined = joined.join(
-                _tagged(
-                    rels[t["name"]], t["keys"] + t["group"], t["name"]
-                ),
-                t["keys"],
-            )
-        return joined
-
     pairs = []
     for s in sides:
         name = s["name"]
@@ -731,12 +799,14 @@ def _refresh_minmax_star(
         for states in (olds, news):
             rels = {t["name"]: states[t["name"]] for t in sides}
             rels[name] = cells
-            pairs.append(_star_join(rels).select(*all_groups))
+            pairs.append(_star_join(sides, rels).select(*all_groups))
     affected = pairs[0]
     for p in pairs[1:]:
         affected = affected.unionByName(p)
     affected = affected.distinct()
-    joined_new = _star_join(news).join(affected, all_groups, "left_semi")
+    joined_new = _star_join(sides, news).join(
+        affected, all_groups, "left_semi"
+    )
     recomputed = _group_rollup_star(
         joined_new, all_groups, parsed, side_names
     )
@@ -837,17 +907,10 @@ def tx_refresh_matview_star(spark: SparkSession, dst: str) -> int | None:
                 rels[t["name"]] = F.broadcast(deltas[t["name"]])
             else:
                 rels[t["name"]] = old_states[t["name"]]
-        joined = _tagged(
-            rels["fact"], sides[0]["keys"] + sides[0]["group"], "fact"
-        )
-        for t in sides[1:]:
-            joined = joined.join(
-                _tagged(rels[t["name"]], t["keys"] + t["group"],
-                        t["name"]),
-                t["keys"],
-            )
         terms.append(
-            joined.select(*all_groups, *_products_star(parsed, side_names))
+            _star_join(sides, rels).select(
+                *all_groups, *_products_star(parsed, side_names)
+            )
         )
     delta_view = terms[0]
     for t in terms[1:]:
@@ -888,7 +951,10 @@ def _advance_states(spark, spec, sides, parsed, filters, token) -> None:
     deriving its delta from ITS OWN floor (create-time states carry
     none → the spec base) under the same exactly-once token —
     self-healing for any crash point in the (view, state...) merge
-    sequence, exactly like the two-sided module."""
+    sequence: a state already at or past the token skips, a state
+    several refreshes behind replays its whole missed window, and an
+    already-applied merge raises the app floor error, which here
+    means 'done'."""
     n, bits = len(sides), int(spec["bits"])
     targets = _unpack(token, n, bits)
     for i, s in enumerate(sides):

@@ -10,12 +10,11 @@ LogStore (the commit protocol needs only atomic put-if-absent — POSIX
 link(2) default, object-store conditional PUT), and vacuum.
 
 Round 4 left the engine with three separately crash-tested commit
-protocols — the compaction manifest (``operators/compaction.py``),
-the upsert generation pointer + commit log
-(``streaming/upsert_sink.py``), and additive schema evolution
-(``operators/evolution.py``).  A real 100 TB lakehouse runs all of
-those against one log with snapshot isolation; this module is that
-unification (the mini-Delta the other three docstrings point at).
+protocols — a compaction manifest, an upsert generation pointer +
+commit log, and additive schema evolution over parquet footers.  A
+real 100 TB lakehouse runs all of those against one log with snapshot
+isolation; this module is that unification (a mini-Delta), and the
+three per-operator modules are gone.
 The reference has nothing comparable — its "table" is a directory of
 NDJSON/parquet it rewrites wholesale (``toy_glue.py:58-65``); every
 semantic here is greenfield scale engineering.
@@ -65,11 +64,6 @@ interleaves over an in-memory store (``tests/test_logstore.py``).
 Data files never need that primitive — they publish invisibly and the
 commit file is the only publication point — so Spark's own
 HDFS/S3A-capable filesystem layer carries them unchanged.
-
-Cites: replaces the per-operator protocols of ``compaction.py:128-165``,
-``upsert_sink.py:131-145``, ``evolution.py:50-66`` (all kept — their
-crash-injection suites also run against this log, see
-``tests/test_txtable.py``).
 """
 
 from __future__ import annotations
@@ -2404,10 +2398,9 @@ def _phys_clause_col(pm: dict, col: str) -> str:
 
 
 def _check_evolution(existing_schema: str, df: DataFrame) -> DataFrame:
-    """Additive-evolution contract (``operators/evolution.py``
-    semantics, enforced against the LOG schema instead of parquet
-    footers): new nullable columns allowed, missing columns
-    null-filled, type changes refused loudly."""
+    """Additive-evolution contract, enforced against the LOG schema:
+    new nullable columns allowed, missing columns null-filled, type
+    changes refused loudly."""
     from pyspark.sql.types import StructType
 
     existing = StructType.fromJson(json.loads(existing_schema))
@@ -3148,9 +3141,8 @@ def tx_compact(
     if there was nothing worth compacting.  Commutes with concurrent
     appends (validation only aborts if a victim was concurrently
     removed).  With ``order_col`` the rewrite range-partitions + sorts
-    on that column (``operators/compaction.py`` semantics), so a
-    sorted/Z-ordered table KEEPS its clustering and footer min/max
-    stats stay selective.  When ``order_col`` is omitted, the table's
+    on that column, so a sorted/Z-ordered table KEEPS its clustering
+    and footer min/max stats stay selective.  When ``order_col`` is omitted, the table's
     declared properties govern: ``cluster_by``, else the raw column of
     the ``partition_by`` transform — so compacting a table that
     promised ``day(ts)`` pruning re-clusters on ``ts`` and the derived
@@ -4072,10 +4064,9 @@ def tx_upsert_stream(
     available_now: bool = True,
     merge_on_read: bool = False,
 ):
-    """Streaming MERGE sink committing through the unified log — the
-    ``streaming/upsert_sink.py`` semantics (newest per key, changes
-    win ties) with the generation-pointer protocol replaced by this
-    module's commit log, and REPLAY made exactly-once by the
+    """Streaming MERGE sink committing through the unified log —
+    newest row per key, changes win ties (``upsert_snapshot``
+    semantics) — with REPLAY made exactly-once by the
     ``(app_id, batch_id)`` token recorded in each commit: a restarted
     query that re-delivers batch N finds N already in the log and
     skips it, so the version history stays one-commit-per-batch

@@ -320,10 +320,10 @@ FAMILY_REP: dict[str, str] = {
     "tx_matview_incremental": "tx_matview_join",
     # round 10 rotation (the one this round): tx_matview_join takes
     # the IVM family's PRIMARY slot — factorized two-sided IVM
-    # (operators/matview_join.py): grouped aggregates over an
-    # equi-join maintained from BOTH change feeds without re-reading
-    # either source (spy-asserted), applied exactly-once under a
-    # packed (vA, vB) token.  It SUBSUMES ivm_join_delta's ΔA/ΔB
+    # (the one-dimension star of operators/matview_star.py): grouped
+    # aggregates over an equi-join maintained from BOTH change feeds
+    # without re-reading either source (spy-asserted), applied
+    # exactly-once under a packed (vA, vB) token.  It SUBSUMES ivm_join_delta's ΔA/ΔB
     # decomposition (the same four-term algebra, now against
     # maintained state instead of a staged prior) and adds the
     # multi-table exactly-once apply; ivm_join_delta (hash-passed

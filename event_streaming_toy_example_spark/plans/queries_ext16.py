@@ -68,9 +68,8 @@ def q_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once via the ``(app, batch)`` token), multiple
     micro-batches forced with ``maxFilesPerTrigger`` so the
     merge-into-state loop actually iterates.  Round 6 migrated this
-    entry off the legacy generation-pointer sink
-    (``streaming/upsert_sink.py``, kept as an adapter) onto the one
-    commit log the batch operators use.  The final snapshot must equal
+    entry off a generation-pointer sink onto the one commit log the
+    batch operators use.  The final snapshot must equal
     the batch latest-per-key — which is exactly what the oracle
     computes."""
     import tempfile

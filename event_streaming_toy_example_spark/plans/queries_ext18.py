@@ -1,14 +1,14 @@
 """Round-4 additions (eleventh wave).
 
-- ``layout_compact_invariance`` — small-file compaction
-  (``operators/compaction.py``) driven end-to-end inside a query: a
-  deliberately fragmented copy of the events table is bin-packed and
-  the operator's CONTRACT — row content invariant under compaction,
-  file count strictly reduced — is emitted as a relation the DuckDB
-  oracle predicts exactly from the base table.  The reference's own
-  README targets 100 MB-1 GB parquet files (``README.md:296-297``);
-  compaction is how a real pipeline gets there from streaming-sized
-  output files.
+- ``layout_compact_invariance`` — small-file compaction on the
+  transactional table (``txtable.tx_compact``) driven end-to-end
+  inside a query: a deliberately fragmented copy of the events table
+  is bin-packed and the operator's CONTRACT — row content invariant
+  under compaction, live file count strictly reduced — is emitted as
+  a relation the DuckDB oracle predicts exactly from the base table.
+  The reference's own README targets 100 MB-1 GB parquet files
+  (``README.md:296-297``); compaction is how a real pipeline gets
+  there from streaming-sized output files.
 - ``stream_running_stats`` — per-user running profile totals via
   ``transformWithStateInPandas`` (the Spark 4 state-v2 API), unlocked
   in round 4 by the pure-Python protobuf fallback runtime
@@ -34,10 +34,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from event_streaming_toy_example_spark.operators.compaction import (
-    compact_files,
-    compaction_invariance,
-)
 from event_streaming_toy_example_spark.schemas import load_table
 
 _COMPACT_FRAGMENTS = 24
@@ -53,6 +49,38 @@ _COMPACT_INVARIANCE_SCHEMA = StructType(
 )
 
 
+def _compaction_invariance(
+    df_before: DataFrame, df_after: DataFrame, key_col: str, value_col: str
+) -> DataFrame:
+    """The property a compaction must preserve, as a relation: per-key
+    row counts and exact value sums before vs after, with a boolean
+    equality column — the deterministic oracle shape for the catalog
+    entry (the oracle recomputes the 'before' side and predicts
+    equal=1 everywhere)."""
+    a = df_before.groupBy(key_col).agg(
+        F.count(F.lit(1)).alias("n_before"),
+        F.sum(value_col).alias("sum_before"),
+    )
+    b = df_after.groupBy(key_col).agg(
+        F.count(F.lit(1)).alias("n_after"),
+        F.sum(value_col).alias("sum_after"),
+    )
+    return (
+        a.join(b, key_col, "full_outer")
+        .select(
+            key_col,
+            F.coalesce("n_before", F.lit(0)).alias("n_rows"),
+            F.coalesce("sum_before", F.lit(0)).alias("value_sum"),
+            (
+                F.col("n_before").eqNullSafe(F.col("n_after"))
+                & F.col("sum_before").eqNullSafe(F.col("sum_after"))
+            )
+            .cast("int")
+            .alias("invariant_ok"),
+        )
+    )
+
+
 def q_layout_compact_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fragment -> compact -> verify, in one query.
 
@@ -60,6 +88,8 @@ def q_layout_compact_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariance relation (|event_type| rows) is materialized before
     cleanup — a bounded-artifact collect, same class as the PQ
     codebooks and BPE vocab."""
+    from event_streaming_toy_example_spark.operators import txtable as tx
+
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -68,18 +98,18 @@ def q_layout_compact_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="compact_q_")
     try:
         path = f"{base}/tbl"
-        events.repartition(_COMPACT_FRAGMENTS).write.mode("overwrite").parquet(
-            path
-        )
-        res = compact_files(spark, path, target_bytes=1 << 30)
-        inv = compaction_invariance(
+        tx.tx_append(events.repartition(_COMPACT_FRAGMENTS), path)
+        files_before = len(tx.snapshot(path).files)
+        tx.tx_compact(spark, path, target_bytes=1 << 30)
+        files_after = len(tx.snapshot(path).files)
+        inv = _compaction_invariance(
             events,
-            spark.read.parquet(path),
+            tx.read_table(spark, path),
             key_col="event_type",
             value_col="value_cc",
         ).withColumn(
             "files_reduced",
-            F.lit(res.files_after < res.files_before).cast("int"),
+            F.lit(files_after < files_before).cast("int"),
         )
         rows = [
             (r["event_type"], r["n_rows"], r["value_sum"], r["invariant_ok"],

@@ -213,12 +213,14 @@ def _build_matview_join(spark: SparkSession, sf_dir: str) -> str:
     orders ⋈ customer, maintained through a delete on the A side and a
     partial update on the B side in ONE refresh — spy-asserted to
     never re-read either source (the factorized-state contract),
-    applied exactly-once under the packed two-version token."""
+    applied exactly-once under the packed two-version token.  The
+    two-table view is the one-dimension star (``fact = a``, dim
+    ``b``)."""
     import os as _os
     import unittest.mock as _m
 
     from event_streaming_toy_example_spark.operators import (
-        matview_join as mj,
+        matview_star as ms,
     )
     from event_streaming_toy_example_spark.operators import txtable as tx
 
@@ -242,14 +244,16 @@ def _build_matview_join(spark: SparkSession, sf_dir: str) -> str:
             ).repartitionByRange(4, "custkey"),
             b,
         )
-        mj.tx_create_matview_join(
-            spark, a, b, dst, on=["custkey"],
-            group_by_a=["o_orderstatus"], group_by_b=["c_mktsegment"],
+        ms.tx_create_matview_star(
+            spark, dst, a,
+            dims=[{"name": "b", "src": b, "on": ["custkey"],
+                   "group_by": ["c_mktsegment"]}],
             aggs={
                 "n": ("count", "*"),
-                "revenue": ("sum", "a.o_totalprice"),
+                "revenue": ("sum", "fact.o_totalprice"),
                 "avg_bal": ("avg", "b.c_acctbal"),
             },
+            group_by_fact=["o_orderstatus"],
         )
         tx.tx_delete(spark, a, [("o_orderstatus", "=", "P")])
         tx.tx_update(
@@ -264,14 +268,14 @@ def _build_matview_join(spark: SparkSession, sf_dir: str) -> str:
             calls.append(_os.path.abspath(path))
             return orig(sp, path, *args, **kwargs)
 
-        with _m.patch.object(mj.tx, "read_table", side_effect=spy):
-            mj.tx_refresh_matview_join(spark, dst)
+        with _m.patch.object(ms.tx, "read_table", side_effect=spy):
+            ms.tx_refresh_matview_star(spark, dst)
         bad = set(calls) & {_os.path.abspath(a), _os.path.abspath(b)}
         assert not bad, f"delta refresh re-read source table(s): {bad}"
-        (pa, pb), (ca, cb) = mj.matview_join_lag(dst)
-        assert (pa, pb) == (ca, cb) == (2, 2)
+        applied, current = ms.matview_star_lag(dst)
+        assert applied == current == {"fact": 2, "b": 2}
 
-    return stage_dir_once(build, "txtable_matview_join_v1", sf_dir)
+    return stage_dir_once(build, "txtable_matview_join_v2", sf_dir)
 
 
 def q_tx_matview_join(spark: SparkSession, sf_dir: str) -> DataFrame:

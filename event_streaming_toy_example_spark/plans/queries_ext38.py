@@ -97,8 +97,9 @@ GROUP BY event_type
 
 
 def _build_matview_minmax(spark: SparkSession, sf_dir: str) -> str:
-    """Stage once per corpus: a join matview carrying min/max (round
-    12 lifts the refusal — recompute-affected-groups mode).  The
+    """Stage once per corpus: a two-table join matview (the
+    one-dimension star) carrying min/max (round 12 lifts the refusal —
+    recompute-affected-groups mode).  The
     APPEND refresh is spy-asserted SOURCE-FREE (extrema merge
     monotonically from the delta); the DELETE refresh removes the
     global top-price rows — retracting the max in many groups — and
@@ -106,7 +107,7 @@ def _build_matview_minmax(spark: SparkSession, sf_dir: str) -> str:
     import unittest.mock as _m
 
     from event_streaming_toy_example_spark.operators import (
-        matview_join as mj,
+        matview_star as ms,
     )
     from event_streaming_toy_example_spark.operators import txtable as tx
     from event_streaming_toy_example_spark.plans.queries_ext import (
@@ -134,16 +135,18 @@ def _build_matview_minmax(spark: SparkSession, sf_dir: str) -> str:
             ).repartitionByRange(4, "custkey"),
             b,
         )
-        mj.tx_create_matview_join(
-            spark, a, b, dst, on=["custkey"],
-            group_by_a=["o_orderstatus"], group_by_b=["c_mktsegment"],
+        ms.tx_create_matview_star(
+            spark, dst, a,
+            dims=[{"name": "b", "src": b, "on": ["custkey"],
+                   "group_by": ["c_mktsegment"]}],
             aggs={
                 "n": ("count", "*"),
-                "min_price": ("min", "a.o_totalprice"),
-                "max_price": ("max", "a.o_totalprice"),
+                "min_price": ("min", "fact.o_totalprice"),
+                "max_price": ("max", "fact.o_totalprice"),
                 "max_bal": ("max", "b.c_acctbal"),
-                "revenue": ("sum", "a.o_totalprice"),
+                "revenue": ("sum", "fact.o_totalprice"),
             },
+            group_by_fact=["o_orderstatus"],
         )
         # APPEND refresh: new global maxima, merged monotonically —
         # neither source may be re-read
@@ -162,8 +165,8 @@ def _build_matview_minmax(spark: SparkSession, sf_dir: str) -> str:
             calls.append(_os.path.abspath(path))
             return orig(sp, path, *args, **kwargs)
 
-        with _m.patch.object(mj.tx, "read_table", side_effect=spy):
-            mj.tx_refresh_matview_join(spark, dst)
+        with _m.patch.object(ms.tx, "read_table", side_effect=spy):
+            ms.tx_refresh_matview_star(spark, dst)
         bad = set(calls) & {_os.path.abspath(a), _os.path.abspath(b)}
         assert not bad, (
             f"append-only minmax refresh re-read source table(s): {bad}"
@@ -171,11 +174,11 @@ def _build_matview_minmax(spark: SparkSession, sf_dir: str) -> str:
         # DELETE refresh: retract the top-price rows (the max of many
         # groups) — the bounded per-cell rescan repairs the extrema
         tx.tx_delete(spark, a, [("o_totalprice", ">", 400000.0)])
-        mj.tx_refresh_matview_join(spark, dst)
-        (pa, pb), (ca, cb) = mj.matview_join_lag(dst)
-        assert (pa, pb) == (ca, cb) == (3, 1)
+        ms.tx_refresh_matview_star(spark, dst)
+        applied, current = ms.matview_star_lag(dst)
+        assert applied == current == {"fact": 3, "b": 1}
 
-    return stage_dir_once(build, "txtable_matview_minmax_v1", sf_dir)
+    return stage_dir_once(build, "txtable_matview_minmax_v2", sf_dir)
 
 
 def q_tx_matview_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -69,14 +69,18 @@ _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 def _parse_width(raw: str, source: str) -> int:
     """Parse a width override, naming the misconfigured source in the
     error instead of raising a bare ``ValueError`` from ``int()`` deep
-    inside query execution (ADVICE r12)."""
+    inside query execution (ADVICE r12).  Values below 1 are rejected,
+    not clamped: a zero or negative width is a misconfiguration."""
     try:
-        return max(1, int(raw))
+        width = int(raw)
     except ValueError:
+        width = 0  # not an integer: refused below like any width < 1
+    if width < 1:
         raise ValueError(
             f"invalid streaming state-partition override {raw!r} from "
             f"{source}: expected a positive integer"
-        ) from None
+        )
+    return width
 
 
 def stream_state_partitions(spark: SparkSession) -> int:

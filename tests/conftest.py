@@ -40,15 +40,48 @@ _FAST_OVERRIDES: dict[str, str] = {}
 _FAST_EXTRAS: set[tuple[str, str]] = set()
 
 
+def _stale_fast_names(items, overrides=None, extras=None) -> list[str]:
+    """``_FAST_OVERRIDES`` / ``_FAST_EXTRAS`` entries naming a test
+    module that is not in this directory, or a test function that its
+    collected module does not define.  Judged per module, so a run
+    that collects only some files (or selects single tests) flags
+    nothing it cannot see."""
+    import os.path
+
+    overrides = _FAST_OVERRIDES if overrides is None else overrides
+    extras = _FAST_EXTRAS if extras is None else extras
+    here = os.path.dirname(os.path.abspath(__file__))
+    modules = {}
+    for item in items:
+        mod = getattr(item, "module", None)
+        if mod is not None:
+            modules[os.path.basename(item.location[0])] = mod
+    stale = []
+    for mod, name in sorted(set(overrides.items()) | set(extras)):
+        if not os.path.exists(os.path.join(here, mod)):
+            stale.append(f"{mod} (no such test module)")
+        elif mod in modules and not hasattr(modules[mod], name):
+            stale.append(f"{mod}::{name} (no such test)")
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
     """Mark a driver-facing FAST subset (VERDICT r12 item 7): the full
     suite is ~1.5 h, which exceeds the driver's pytest budget, so
     ``-m fast`` selects one representative test per module (= per
     operator family) — the first collected test by default, or the
     ``_FAST_OVERRIDES`` entry where the first is slow.  Target: <10 min
-    wall on the 32-core box."""
+    wall on the 32-core box.  A stale override or extra fails the
+    collection: it would otherwise drop its module from ``-m fast``
+    without a word."""
     import os.path
 
+    stale = _stale_fast_names(items)
+    if stale:
+        raise pytest.UsageError(
+            "stale fast-subset names in tests/conftest.py: "
+            + ", ".join(stale)
+        )
     first_seen: set[str] = set()
     for item in items:
         mod = os.path.basename(item.location[0])

@@ -10,7 +10,7 @@
    writers never call) and silently discarded background failures;
    ``_maint_submit`` now sweeps completed futures and keeps their
    exceptions for the next drain.
-3. (low) ``matview_join._estimated_change_rows`` counted a
+3. (low) ``matview._estimated_change_rows`` counted a
    stats-less file as 0 rows, routing unknown-size backfills onto the
    driver-pandas path; unknown now means over-threshold.
 4. (low) ``SHOW CREATE TABLE`` emitted string property values without
@@ -32,7 +32,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_toy_example_spark.operators import (
-    matview_join as mvj,
+    matview as mv,
     txsql,
     txtable as tx,
     warehouse as whcat,
@@ -172,7 +172,7 @@ def test_statless_change_window_routes_over_threshold(spark, tmp_path):
     p = str(tmp_path / "t")
     tx.tx_append(_row_batch(spark, 0, 50), p)
     v = tx.table_version(p)
-    assert 0 < mvj._estimated_change_rows(p, 0, v) <= mvj.DIST_DELTA_ROWS
+    assert 0 < mv._estimated_change_rows(p, 0, v) <= mv.DIST_DELTA_ROWS
 
     real = tx._read_commit
 
@@ -180,8 +180,8 @@ def test_statless_change_window_routes_over_threshold(spark, tmp_path):
         return dataclasses.replace(real(src, ver), stats={})
 
     with mock.patch.object(tx, "_read_commit", side_effect=stripped):
-        est = mvj._estimated_change_rows(p, 0, v)
-    assert est > mvj.DIST_DELTA_ROWS
+        est = mv._estimated_change_rows(p, 0, v)
+    assert est > mv.DIST_DELTA_ROWS
 
 
 def test_statless_removed_file_routes_over_threshold(spark, tmp_path):
@@ -200,8 +200,8 @@ def test_statless_removed_file_routes_over_threshold(spark, tmp_path):
         return None if s is None else dataclasses.replace(s, stats={})
 
     with mock.patch.object(tx, "snapshot", side_effect=snap_nostats):
-        est = mvj._estimated_change_rows(p, v - 1, v)
-    assert est > mvj.DIST_DELTA_ROWS
+        est = mv._estimated_change_rows(p, v - 1, v)
+    assert est > mv.DIST_DELTA_ROWS
 
 
 # ------------------------------- 4. SHOW CREATE TABLE quote escaping

@@ -1,47 +1,50 @@
-"""Small-file compaction: bin-packing, clustering preservation,
-selective (no-rewrite-amplification) mode, and content invariance."""
+"""Small-file compaction on the transactional table (``tx_compact``):
+bin-packing, clustering preservation, selective
+(no-rewrite-amplification) mode, and content invariance."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from event_streaming_toy_example_spark.operators.compaction import (
-    compact_files,
-    compaction_invariance,
-    list_data_files,
+from event_streaming_toy_example_spark.operators import txtable as tx
+from event_streaming_toy_example_spark.plans.queries_ext18 import (
+    _compaction_invariance,
 )
 
 
 def _fragmented_table(spark, path: str, n_files: int = 32, rows: int = 4000):
-    (
+    tx.tx_append(
         spark.range(rows)
         .select(
             F.col("id"),
             (F.col("id") % 7).alias("k"),
             (F.col("id") * 3).alias("v"),
         )
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(path)
+        .repartition(n_files),
+        path,
     )
+
+
+def _live_files(path: str) -> list[tuple[str, int]]:
+    """(table-relative name, size) of every live data file."""
+    return [
+        (f, os.path.getsize(os.path.join(path, f)))
+        for f in tx.snapshot(path).files
+    ]
 
 
 def test_full_compaction_packs_and_preserves_rows(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path)
-    before = spark.read.parquet(path)
-    sum_before = before.agg(F.sum("v")).collect()[0][0]
-    n_files_before = len(list_data_files(spark, path))
-    assert n_files_before >= 30
+    sum_before = tx.read_table(spark, path).agg(F.sum("v")).collect()[0][0]
+    assert len(_live_files(path)) >= 30
 
-    res = compact_files(spark, path, target_bytes=1 << 30)
-    assert res.files_before == n_files_before
-    assert res.files_after == 1  # everything fits one target-size file
-    after = spark.read.parquet(path)
+    assert tx.tx_compact(spark, path, target_bytes=1 << 30) is not None
+    assert len(_live_files(path)) == 1  # everything fits one target file
+    after = tx.read_table(spark, path)
     assert after.count() == 4000
     assert after.agg(F.sum("v")).collect()[0][0] == sum_before
 
@@ -49,11 +52,10 @@ def test_full_compaction_packs_and_preserves_rows(spark, tmp_path):
 def test_target_size_controls_output_count(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path)
-    total = sum(s for _, s in list_data_files(spark, path))
-    target = total // 4 + 1
-    res = compact_files(spark, path, target_bytes=target)
+    total = sum(s for _, s in _live_files(path))
+    tx.tx_compact(spark, path, target_bytes=total // 4 + 1)
     # ceil(total/target) = 4 packed files
-    assert res.files_after == 4
+    assert len(_live_files(path)) == 4
 
 
 def test_order_col_preserves_clustering(spark, tmp_path):
@@ -62,11 +64,11 @@ def test_order_col_preserves_clustering(spark, tmp_path):
     selective (a round-robin repack would destroy it)."""
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path, n_files=32, rows=8000)
-    total = sum(s for _, s in list_data_files(spark, path))
-    compact_files(spark, path, target_bytes=total // 4 + 1, order_col="id")
+    total = sum(s for _, s in _live_files(path))
+    tx.tx_compact(spark, path, target_bytes=total // 4 + 1, order_col="id")
     ranges = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        meta = pq.ParquetFile(f).metadata
+    for f, _ in _live_files(path):
+        meta = pq.ParquetFile(os.path.join(path, f)).metadata
         mins, maxs = [], []
         for rg in range(meta.num_row_groups):
             for ci in range(meta.row_group(rg).num_columns):
@@ -86,52 +88,62 @@ def test_selective_mode_leaves_big_files_alone(spark, tmp_path):
     makes continuous compaction affordable at scale."""
     path = str(tmp_path / "tbl")
     # one big file + many small ones
-    spark.range(200_000).select(
-        F.col("id"), (F.col("id") * 3).alias("v"), (F.col("id") % 7).alias("k")
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    big = [p for p, s in list_data_files(spark, path)]
+    tx.tx_append(
+        spark.range(200_000).select(
+            F.col("id"), (F.col("id") * 3).alias("v"),
+            (F.col("id") % 7).alias("k"),
+        ).coalesce(1),
+        path,
+    )
+    big = [f for f, _ in _live_files(path)]
     assert len(big) == 1
-    spark.range(200_000, 204_000).select(
-        F.col("id"), (F.col("id") * 3).alias("v"), (F.col("id") % 7).alias("k")
-    ).repartition(16).write.mode("append").parquet(path)
-    files = list_data_files(spark, path)
+    tx.tx_append(
+        spark.range(200_000, 204_000).select(
+            F.col("id"), (F.col("id") * 3).alias("v"),
+            (F.col("id") % 7).alias("k"),
+        ).repartition(16),
+        path,
+    )
+    files = _live_files(path)
     assert len(files) == 17
     big_size = max(s for _, s in files)
 
-    res = compact_files(
+    tx.tx_compact(
         spark, path, target_bytes=1 << 30, small_file_bytes=big_size
     )
-    assert res.files_before == 17
-    assert res.files_after == 2  # untouched big file + one packed file
-    # the big file's path survived verbatim (no rewrite amplification)
-    assert any(os.path.basename(big[0]) == os.path.basename(p)
-               for p, _ in list_data_files(spark, path))
-    assert res.rows == 4000  # only the small files' rows were rewritten
-    assert spark.read.parquet(path).count() == 204_000
+    after = [f for f, _ in _live_files(path)]
+    assert len(after) == 2  # untouched big file + one packed file
+    # the big file survived verbatim (no rewrite amplification)
+    assert big[0] in after
+    # only the small files' rows were rewritten
+    (packed,) = [f for f in after if f != big[0]]
+    assert pq.ParquetFile(os.path.join(path, packed)).metadata.num_rows == 4000
+    assert tx.read_table(spark, path).count() == 204_000
 
 
 def test_noop_when_nothing_to_pack(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    spark.range(100).coalesce(1).write.mode("overwrite").parquet(path)
-    files = list_data_files(spark, path)
-    res = compact_files(spark, path, target_bytes=1 << 30)
-    assert (res.files_before, res.files_after, res.rows) == (1, 1, 0)
-    assert list_data_files(spark, path) == files  # untouched
+    tx.tx_append(spark.range(100).coalesce(1), path)
+    files = _live_files(path)
+    assert tx.tx_compact(spark, path, target_bytes=1 << 30) is None
+    assert tx.table_version(path) == 1  # nothing committed
+    assert _live_files(path) == files  # untouched
 
 
 def test_invariance_relation_shape(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path)
-    before = spark.read.parquet(path).select("k", "v").cache()
-    before.count()  # pin BEFORE content: the path is compacted in place
-    compact_files(spark, path, target_bytes=1 << 30)
-    inv = compaction_invariance(
-        before, spark.read.parquet(path), key_col="k", value_col="v"
+    tx.tx_compact(spark, path, target_bytes=1 << 30)
+    # the pre-compaction version stays readable (snapshot isolation)
+    inv = _compaction_invariance(
+        tx.read_table(spark, path, version=1).select("k", "v"),
+        tx.read_table(spark, path).select("k", "v"),
+        key_col="k",
+        value_col="v",
     )
     rows = inv.collect()
     assert len(rows) == 7
     assert all(r["invariant_ok"] == 1 for r in rows)
-    before.unpersist()
 
 
 def test_measured_scan_cost_drops(spark, tmp_path):
@@ -139,10 +151,8 @@ def test_measured_scan_cost_drops(spark, tmp_path):
     splits.  Measure the scan's partition count before/after."""
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path, n_files=64, rows=20_000)
-    n_splits_before = (
-        spark.read.parquet(path).rdd.getNumPartitions()
-    )
-    compact_files(spark, path, target_bytes=1 << 30)
-    n_splits_after = spark.read.parquet(path).rdd.getNumPartitions()
+    n_splits_before = tx.read_table(spark, path).rdd.getNumPartitions()
+    tx.tx_compact(spark, path, target_bytes=1 << 30)
+    n_splits_after = tx.read_table(spark, path).rdd.getNumPartitions()
     assert n_splits_after < n_splits_before
-    assert spark.read.parquet(path).count() == 20_000
+    assert tx.read_table(spark, path).count() == 20_000

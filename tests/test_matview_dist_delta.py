@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_toy_example_spark.operators import matview as mv
-from event_streaming_toy_example_spark.operators import matview_join as mj
+from event_streaming_toy_example_spark.operators import matview_star as ms
 from event_streaming_toy_example_spark.operators import txtable as tx
 from event_streaming_toy_example_spark.sources.txfeed import (
     tx_change_rows_dist,
@@ -72,9 +72,9 @@ def test_big_delta_routes_distributed_and_matches(spark, tmp_path):
         ).repartition(8),
         src,
     )
-    with mock.patch.object(mj, "DIST_DELTA_ROWS", 1_000):
+    with mock.patch.object(mv, "DIST_DELTA_ROWS", 1_000):
         with mock.patch.object(
-            mj, "_change_frames",
+            mv, "_change_frames",
             side_effect=AssertionError(
                 "driver pandas path used for a backfill-scale delta"
             ),
@@ -114,10 +114,11 @@ def test_join_matview_big_delta_routes_distributed(spark, tmp_path):
         ),
         b,
     )
-    mj.tx_create_matview_join(
-        spark, a, b, dst, on=["k"],
-        group_by_a=["ga"], group_by_b=["gb"],
-        aggs={"n": ("count", "*"), "sx": ("sum", "a.x")},
+    ms.tx_create_matview_star(
+        spark, dst, a,
+        dims=[{"name": "b", "src": b, "on": ["k"], "group_by": ["gb"]}],
+        aggs={"n": ("count", "*"), "sx": ("sum", "fact.x")},
+        group_by_fact=["ga"],
     )
     tx.tx_append(
         spark.range(30_000).select(
@@ -127,12 +128,12 @@ def test_join_matview_big_delta_routes_distributed(spark, tmp_path):
         ).repartition(8),
         a,
     )
-    with mock.patch.object(mj, "DIST_DELTA_ROWS", 1_000):
+    with mock.patch.object(mv, "DIST_DELTA_ROWS", 1_000):
         with mock.patch.object(
-            mj, "_change_frames",
+            mv, "_change_frames",
             side_effect=AssertionError("driver pandas path used"),
         ):
-            assert mj.tx_refresh_matview_join(spark, dst) is not None
+            assert ms.tx_refresh_matview_star(spark, dst) is not None
     got = {
         (r["ga"], r["gb"]): (r["n"], r["sx"])
         for r in tx.read_table(spark, dst)
@@ -156,9 +157,9 @@ def test_estimate_is_metadata_only_and_covers_removals(spark, tmp_path):
     p = str(tmp_path / "t")
     _seed(spark, p, n=1_000, parts=2)
     tx.tx_delete(spark, p, [("g", "=", 2)])  # rewrite commit
-    est = mj._estimated_change_rows(p, 1, 2)
+    est = mv._estimated_change_rows(p, 1, 2)
     # the delete rewrites files: estimate counts removed + re-added
     assert est >= 1_000
     # small window under threshold keeps the driver path (no Spark job)
-    wdf = mj._weighted_delta_rows(spark, p, 1, 2, ["g", "v"])
+    wdf = mv._weighted_delta_rows(spark, p, 1, 2, ["g", "v"])
     assert wdf is not None

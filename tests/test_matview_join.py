@@ -1,8 +1,9 @@
-"""Join materialized views (``operators/matview_join.py``): factorized
-two-sided IVM — create-time correctness vs a direct join, delta
-refresh on either/both sides from the change feeds alone (spy-asserted
-to never re-read a source), group kills, exactly-once replay, and the
-typed refusals (min/max, NULL group keys)."""
+"""Two-table join materialized views — the one-dimension star of
+``operators/matview_star.py`` (``fact = a``, dim ``b``): create-time
+correctness vs a direct join, delta refresh on either/both sides from
+the change feeds alone (spy-asserted to never re-read a source), group
+kills, exactly-once replay, the packed two-version token, and the
+typed NULL-group-key refusal."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import unittest.mock as mock
 import pytest
 from pyspark.sql import functions as F
 
-from event_streaming_toy_example_spark.operators import matview_join as mj
+from event_streaming_toy_example_spark.operators import matview_star as ms
 from event_streaming_toy_example_spark.operators import txtable as tx
 
 _A = "k int, ga string, x double"
@@ -37,9 +38,18 @@ _ROWS_B = [
 
 _AGGS = {
     "n": ("count", "*"),
-    "sum_x": ("sum", "a.x"),
+    "sum_x": ("sum", "fact.x"),
     "avg_y": ("avg", "b.y"),
 }
+
+
+def _create_join(spark, a, b, dst, aggs=_AGGS):
+    """``a JOIN b USING (k) GROUP BY ga, gb`` as a one-dimension star."""
+    return ms.tx_create_matview_star(
+        spark, dst, a,
+        dims=[{"name": "b", "src": b, "on": ["k"], "group_by": ["gb"]}],
+        aggs=aggs, group_by_fact=["ga"],
+    )
 
 
 def _expected(spark, a_rows, b_rows):
@@ -83,10 +93,7 @@ def _got(spark, dst):
 def _create(spark, tmp_path, rows_a=_ROWS_A, rows_b=_ROWS_B):
     a, b = _mk(spark, tmp_path, rows_a, rows_b)
     dst = str(tmp_path / "mv")
-    mj.tx_create_matview_join(
-        spark, a, b, dst, on=["k"],
-        group_by_a=["ga"], group_by_b=["gb"], aggs=_AGGS,
-    )
+    _create_join(spark, a, b, dst)
     return a, b, dst
 
 
@@ -100,8 +107,8 @@ def _refresh_spied(spark, dst, forbidden):
         calls.append(os.path.abspath(path))
         return orig(sp, path, *args, **kwargs)
 
-    with mock.patch.object(mj.tx, "read_table", side_effect=spy):
-        v = mj.tx_refresh_matview_join(spark, dst)
+    with mock.patch.object(ms.tx, "read_table", side_effect=spy):
+        v = ms.tx_refresh_matview_star(spark, dst)
     bad = set(calls) & {os.path.abspath(p) for p in forbidden}
     assert not bad, f"delta refresh re-read source table(s): {bad}"
     return v
@@ -171,11 +178,11 @@ def test_update_is_retract_then_add(spark, tmp_path):
 def test_refresh_is_idempotent_and_exactly_once(spark, tmp_path):
     a, _b, dst = _create(spark, tmp_path)
     tx.tx_append(spark.createDataFrame([(1, "p", 1.0)], _A), a)
-    v1 = mj.tx_refresh_matview_join(spark, dst)
+    v1 = ms.tx_refresh_matview_star(spark, dst)
     assert v1 is not None
-    assert mj.tx_refresh_matview_join(spark, dst) is None  # current
-    (pa, pb), (ca, cb) = mj.matview_join_lag(dst)
-    assert (pa, pb) == (ca, cb)
+    assert ms.tx_refresh_matview_star(spark, dst) is None  # current
+    applied, current = ms.matview_star_lag(dst)
+    assert applied == current == {"fact": 2, "b": 1}
 
 
 def test_crash_between_view_and_state_merges_replays_clean(spark, tmp_path):
@@ -185,7 +192,7 @@ def test_crash_between_view_and_state_merges_replays_clean(spark, tmp_path):
     # the refresh calls _advance_states twice (repair pass first, then
     # the post-view-merge advancement) — let the repair through, crash
     # the advancement
-    orig_adv = mj._advance_states
+    orig_adv = ms._advance_states
     calls = {"n": 0}
 
     def crashing(*args, **kwargs):
@@ -194,14 +201,14 @@ def test_crash_between_view_and_state_merges_replays_clean(spark, tmp_path):
             raise RuntimeError("crash")
         return orig_adv(*args, **kwargs)
 
-    with mock.patch.object(mj, "_advance_states", side_effect=crashing):
+    with mock.patch.object(ms, "_advance_states", side_effect=crashing):
         with pytest.raises(RuntimeError):
-            mj.tx_refresh_matview_join(spark, dst)
+            ms.tx_refresh_matview_star(spark, dst)
     # replay: the view token has landed, so the refresh is "current" —
     # but the repair pass must still catch the STATES up, or the next
     # B-side delta (term2 = SA_new ⋈ ΔSB) would multiply against a
     # stale SA that is missing the crashed window's a-side row
-    assert mj.tx_refresh_matview_join(spark, dst) is None
+    assert ms.tx_refresh_matview_star(spark, dst) is None
     new_b = [(2, "u", 50)]
     tx.tx_append(spark.createDataFrame(new_b, _B), b)
     _refresh_spied(spark, dst, [a, b])
@@ -218,31 +225,12 @@ def test_crash_between_view_and_state_merges_replays_clean(spark, tmp_path):
     )
 
 
-def test_min_max_still_refused_where_unsupported(spark, tmp_path):
-    """Round 12 lifted the two-sided refusal (recompute-affected-
-    groups mode, tests/test_matview_minmax.py); the STAR module and
-    the explicit ``minmax_ok=False`` parse keep the typed refusal."""
-    with pytest.raises(ValueError, match="min is not maintainable"):
-        mj._parse_aggs({"m": ("min", "a.x")}, minmax_ok=False)
-    # and the two-sided create now ACCEPTS it
-    a, b = _mk(spark, tmp_path, _ROWS_A, _ROWS_B)
-    v = mj.tx_create_matview_join(
-        spark, a, b, str(tmp_path / "mv"), on=["k"],
-        group_by_a=["ga"], group_by_b=["gb"],
-        aggs={"m": ("min", "a.x")},
-    )
-    assert v == 1
-
-
 def test_null_group_key_refused(spark, tmp_path):
     a, b = _mk(
         spark, tmp_path, _ROWS_A + [(1, None, 1.0)], _ROWS_B
     )
     with pytest.raises(ValueError, match="NULL group-by key"):
-        mj.tx_create_matview_join(
-            spark, a, b, str(tmp_path / "mv"), on=["k"],
-            group_by_a=["ga"], group_by_b=["gb"], aggs=_AGGS,
-        )
+        _create_join(spark, a, b, str(tmp_path / "mv"))
 
 
 def test_null_join_keys_never_join(spark, tmp_path):
@@ -258,21 +246,27 @@ def test_null_join_keys_never_join(spark, tmp_path):
 
 
 def test_version_pack_roundtrip_and_cap():
-    assert mj._unpack(mj._pack(3, 5)) == (3, 5)
-    assert mj._pack(4, 7) > mj._pack(4, 6) > mj._pack(3, 900000)
-    with pytest.raises(ValueError, match="cap"):
-        mj._pack(1 << 20, 1)
+    # two sides get 60 // 2 = 30 bits each
+    bits = ms._bits_for(2)
+    assert bits == 30
+    assert ms._unpack(ms._pack([3, 5], bits), 2, bits) == [3, 5]
+    assert (
+        ms._pack([4, 7], bits) > ms._pack([4, 6], bits)
+        > ms._pack([3, 900000], bits)
+    )
+    assert ms._unpack(ms._pack([1 << 20, 1], bits), 2, bits) == [1 << 20, 1]
+    with pytest.raises(ValueError, match="cap of the packed watermark"):
+        ms._pack([1 << 30, 1], bits)
 
 
 def test_count_col_through_the_factorization(spark, tmp_path):
     a, b = _mk(spark, tmp_path, _ROWS_A, _ROWS_B)
     dst = str(tmp_path / "mvc")
-    mj.tx_create_matview_join(
-        spark, a, b, dst, on=["k"],
-        group_by_a=["ga"], group_by_b=["gb"],
+    _create_join(
+        spark, a, b, dst,
         aggs={
             "n": ("count", "*"),
-            "n_x": ("count", "a.x"),
+            "n_x": ("count", "fact.x"),
             "n_y": ("count", "b.y"),
         },
     )
@@ -280,7 +274,8 @@ def test_count_col_through_the_factorization(spark, tmp_path):
     def check(a_rows, b_rows):
         got = {
             (r["ga"], r["gb"]): (r["n"], r["n_x"], r["n_y"])
-            for r in tx.read_table(spark, dst).collect()
+            for r in tx.read_table(spark, dst)
+            .select("ga", "gb", "n", "n_x", "n_y").collect()
         }
         want = {}
         for (ka, g1, x) in a_rows:
@@ -306,17 +301,12 @@ def test_create_retry_after_crash_does_not_double_state(spark, tmp_path):
     a, b = _mk(spark, tmp_path, _ROWS_A, _ROWS_B)
     dst = str(tmp_path / "mv")
     with mock.patch.object(
-        mj, "_sum_deltas", side_effect=RuntimeError("crash mid-create")
+        ms, "_sum_deltas_star", side_effect=RuntimeError("crash mid-create")
     ):
         with pytest.raises(RuntimeError):
-            mj.tx_create_matview_join(
-                spark, a, b, dst, on=["k"],
-                group_by_a=["ga"], group_by_b=["gb"], aggs=_AGGS,
-            )
+            _create_join(spark, a, b, dst)
     # states exist from the crashed attempt; dst does not
     assert tx.table_version(dst) == 0
-    mj.tx_create_matview_join(
-        spark, a, b, dst, on=["k"],
-        group_by_a=["ga"], group_by_b=["gb"], aggs=_AGGS,
-    )
+    assert tx.table_version(dst + "__sf") == 1
+    _create_join(spark, a, b, dst)
     assert _got(spark, dst) == _expected(spark, _ROWS_A, _ROWS_B)

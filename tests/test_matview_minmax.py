@@ -1,9 +1,10 @@
-"""min/max aggregates in JOIN matviews (round 12): the side states
-carry per-cell extrema, append-only refreshes stay O(delta) and
-SOURCE-FREE (monotone least/greatest merges — spy-asserted), a
-removal-touched cell pays a bounded per-cell source rescan, and the
-touched view groups recompute from the post-delta states join with
-the same expression create used."""
+"""min/max aggregates in two-table JOIN matviews — the one-dimension
+star of ``operators/matview_star.py`` (``fact = a``, dim ``b``): the
+side states carry per-cell extrema, append-only refreshes stay
+O(delta) and SOURCE-FREE (monotone least/greatest merges —
+spy-asserted), a removal-touched cell pays a bounded per-cell source
+rescan, and the touched view groups recompute from the post-delta
+states join with the same expression create used."""
 
 from __future__ import annotations
 
@@ -13,7 +14,7 @@ import unittest.mock as mock
 import pytest
 from pyspark.sql import functions as F
 
-from event_streaming_toy_example_spark.operators import matview_join as mj
+from event_streaming_toy_example_spark.operators import matview_star as ms
 from event_streaming_toy_example_spark.operators import txtable as tx
 
 _A = "k int, ga string, x double"
@@ -30,10 +31,10 @@ _ROWS_B = [
 
 _AGGS = {
     "n": ("count", "*"),
-    "min_x": ("min", "a.x"),
-    "max_x": ("max", "a.x"),
+    "min_x": ("min", "fact.x"),
+    "max_x": ("max", "fact.x"),
     "max_y": ("max", "b.y"),
-    "sum_x": ("sum", "a.x"),
+    "sum_x": ("sum", "fact.x"),
 }
 
 
@@ -81,9 +82,10 @@ def _create(spark, tmp_path, rows_a=_ROWS_A, rows_b=_ROWS_B):
     tx.tx_append(spark.createDataFrame(rows_a, _A), a)
     tx.tx_append(spark.createDataFrame(rows_b, _B), b)
     dst = str(tmp_path / "mv")
-    mj.tx_create_matview_join(
-        spark, a, b, dst, on=["k"],
-        group_by_a=["ga"], group_by_b=["gb"], aggs=_AGGS,
+    ms.tx_create_matview_star(
+        spark, dst, a,
+        dims=[{"name": "b", "src": b, "on": ["k"], "group_by": ["gb"]}],
+        aggs=_AGGS, group_by_fact=["ga"],
     )
     return a, b, dst
 
@@ -96,8 +98,8 @@ def _refresh_spied(spark, dst, forbidden):
         calls.append(os.path.abspath(path))
         return orig(sp, path, *args, **kwargs)
 
-    with mock.patch.object(mj.tx, "read_table", side_effect=spy):
-        v = mj.tx_refresh_matview_join(spark, dst)
+    with mock.patch.object(ms.tx, "read_table", side_effect=spy):
+        v = ms.tx_refresh_matview_star(spark, dst)
     bad = set(calls) & {os.path.abspath(p) for p in forbidden}
     assert not bad, f"append-only refresh re-read source table(s): {bad}"
     return v
@@ -107,7 +109,7 @@ def test_create_matches_direct_compute(spark, tmp_path):
     _a, _b, dst = _create(spark, tmp_path)
     assert _got(spark, dst) == _expected(_ROWS_A, _ROWS_B)
     # state tables carry per-cell extrema
-    sa = tx.read_table(spark, str(tmp_path / "mv") + "__ja")
+    sa = tx.read_table(spark, str(tmp_path / "mv") + "__sf")
     assert {"__min_x", "__max_x"} <= set(sa.columns)
 
 
@@ -128,7 +130,7 @@ def test_removed_extremum_is_repaired(spark, tmp_path):
     rescan; the view's extrema come back exact."""
     a, b, dst = _create(spark, tmp_path)
     tx.tx_delete(spark, a, [("x", "=", 20.0)])  # (1, p)'s max
-    assert mj.tx_refresh_matview_join(spark, dst) is not None
+    assert ms.tx_refresh_matview_star(spark, dst) is not None
     remaining_a = [r for r in _ROWS_A if r[2] != 20.0]
     assert _got(spark, dst) == _expected(remaining_a, _ROWS_B)
 
@@ -138,7 +140,7 @@ def test_removal_with_dv_commit(spark, tmp_path):
     removal repairs the extremum identically."""
     a, b, dst = _create(spark, tmp_path)
     tx.tx_delete(spark, b, [("y", "=", 400)], merge_on_read=True)
-    assert mj.tx_refresh_matview_join(spark, dst) is not None
+    assert ms.tx_refresh_matview_star(spark, dst) is not None
     remaining_b = [r for r in _ROWS_B if r[2] != 400]
     assert _got(spark, dst) == _expected(_ROWS_A, remaining_b)
 
@@ -151,7 +153,7 @@ def test_group_kill_deletes_view_row(spark, tmp_path):
     # k=1, 2, 4 — remove a's (1, q) row and ("q","u") loses its only
     # joined support
     tx.tx_delete(spark, a, [("x", "=", 5.0)])
-    assert mj.tx_refresh_matview_join(spark, dst) is not None
+    assert ms.tx_refresh_matview_star(spark, dst) is not None
     got = _got(spark, dst)
     assert ("q", "u") not in got
     remaining_a = [r for r in _ROWS_A if r[2] != 5.0]
@@ -165,7 +167,7 @@ def test_mixed_add_and_remove_one_refresh(spark, tmp_path):
     new_b = [(1, "u", 10_000)]
     tx.tx_append(spark.createDataFrame(new_a, _A), a)
     tx.tx_append(spark.createDataFrame(new_b, _B), b)
-    assert mj.tx_refresh_matview_join(spark, dst) is not None
+    assert ms.tx_refresh_matview_star(spark, dst) is not None
     remaining_a = [r for r in _ROWS_A if r[2] != 10.0] + new_a
     assert _got(spark, dst) == _expected(remaining_a, _ROWS_B + new_b)
 
@@ -173,9 +175,9 @@ def test_mixed_add_and_remove_one_refresh(spark, tmp_path):
 def test_refresh_is_idempotent_and_exactly_once(spark, tmp_path):
     a, _b, dst = _create(spark, tmp_path)
     tx.tx_append(spark.createDataFrame([(1, "p", -1.0)], _A), a)
-    v = mj.tx_refresh_matview_join(spark, dst)
+    v = ms.tx_refresh_matview_star(spark, dst)
     assert v is not None
-    assert mj.tx_refresh_matview_join(spark, dst) is None  # current
+    assert ms.tx_refresh_matview_star(spark, dst) is None  # current
     assert _got(spark, dst) == _expected(
         _ROWS_A + [(1, "p", -1.0)], _ROWS_B
     )
@@ -189,7 +191,7 @@ def test_crash_between_view_and_state_merges_self_heals(spark, tmp_path):
     a, _b, dst = _create(spark, tmp_path)
     tx.tx_append(spark.createDataFrame([(1, "p", 0.25)], _A), a)
 
-    real_advance = mj._advance_states
+    real_advance = ms._advance_states
     calls = {"n": 0}
 
     def crashing_advance(*args, **kwargs):
@@ -198,12 +200,12 @@ def test_crash_between_view_and_state_merges_self_heals(spark, tmp_path):
             raise RuntimeError("simulated crash")
         return real_advance(*args, **kwargs)
 
-    with mock.patch.object(mj, "_advance_states", crashing_advance):
+    with mock.patch.object(ms, "_advance_states", crashing_advance):
         with pytest.raises(RuntimeError, match="simulated crash"):
-            mj.tx_refresh_matview_join(spark, dst)
+            ms.tx_refresh_matview_star(spark, dst)
     # view advanced, states stale -> repair, then a second delta
     tx.tx_delete(spark, a, [("x", "=", 0.25)])
-    assert mj.tx_refresh_matview_join(spark, dst) is not None
+    assert ms.tx_refresh_matview_star(spark, dst) is not None
     assert _got(spark, dst) == _expected(_ROWS_A, _ROWS_B)
 
 

@@ -70,18 +70,24 @@ EXPECT = {
     "join_bloom_pruned_revenue": (3, 2),
     # Gopher quality gate: pure row-local expressions, rides the scan
     "curate_gopher_rules": (0, 0),
-    # deletion-neighborhood fuzzy join: ONE shuffle (pair dedup); the
-    # keyed side broadcasts at toy scale (AQE picks SMJ at cluster
-    # scale) — and never a cartesian (asserted separately)
-    "match_fuzzy_names": (1, 1),
+    # deletion-neighborhood fuzzy join: the pair-dedup shuffle plus the
+    # (k, nm, bk) dedup exchange of the persisted keyed relation
+    # (functions/fuzzy.py), which the plan string prints under BOTH
+    # self-join sides (one plan id, executed once); the keyed side
+    # broadcasts at toy scale (AQE picks SMJ at cluster scale) — and
+    # never a cartesian (asserted separately)
+    "match_fuzzy_names": (3, 1),
     # span dedup: window-hash aggregate + per-doc aggregate; the
     # occurrence side broadcasts at toy scale
     "dedup_substring": (2, 1),
     # snapshot diff: the key-join pair of exchanges, nothing more
     "snapshot_diff": (2, 0),
-    # profiling: ONE scan, one multi-distinct aggregate (expand) —
-    # pinned so a refactor back to per-column unions (5 scans) fails
-    "table_stats": (2, 0),
+    # profiling: one multi-distinct aggregate (expand, two exchanges)
+    # plus the split-off string min/max fold (one single-partition
+    # exchange), cross-joined 1 row x 1 row through a broadcast
+    # (plans/queries_ext12.py::q_table_stats) — pinned so a refactor
+    # back to per-column unions (5 scans, 10 exchanges) fails
+    "table_stats": (3, 1),
     # winsorize: fences aggregate + final group-agg; fences broadcast
     "winsorize_revenue": (2, 1),
     # IVM merge: partial rollups + merge re-aggregation
@@ -227,11 +233,23 @@ def test_q10_topk_uses_take_ordered(spark):
 
 
 def test_table_stats_single_scan(spark):
-    """Profiling must read the table ONCE (multi-distinct in one
-    aggregate), not once per profiled column."""
+    """Profiling must not read the table once per profiled column: all
+    columns' multi-distinct stats share ONE aggregate pass.  The string
+    min/max fold is split into its own keyless aggregate on purpose
+    (``plans/queries_ext12.py::q_table_stats``: a string min/max buffer
+    inside the multi-distinct aggregate demoted it to SortAggregate),
+    so the intended plan has exactly two scans, and the second reads
+    only the two string columns it folds."""
+    import re
+
     qs = ALL_QUERIES
     plan, _, _ = _counts(qs["table_stats"](spark, SF_DIR))
-    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("FileScan parquet") == 2, plan
+    read_schemas = [
+        [f.split(":")[0] for f in m.split(",")]
+        for m in re.findall(r"ReadSchema: struct<([^>\n]*)>", plan)
+    ]
+    assert ["o_orderstatus", "o_orderpriority"] in read_schemas, plan
 
 
 @pytest.mark.parametrize("name", sorted(EXPECT))

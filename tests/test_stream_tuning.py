@@ -46,17 +46,22 @@ def test_resolver_precedence(spark, monkeypatch):
 
 def test_resolver_rejects_malformed_override(spark, monkeypatch):
     """A malformed override names its source (ADVICE r12) instead of
-    raising a bare ValueError from int() mid-query."""
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "eight")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
-        stream_state_partitions(spark)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    spark.conf.set("spark_graft.stream.statePartitions", "many")
-    try:
+    raising a bare ValueError from int() mid-query; a width below 1 is
+    rejected the same way, never clamped."""
+    for raw in ("eight", "0", "-8"):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raw)
         with pytest.raises(
-            ValueError, match="spark_graft.stream.statePartitions"
+            ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"
         ):
             stream_state_partitions(spark)
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    try:
+        for raw in ("many", "0", "-8"):
+            spark.conf.set("spark_graft.stream.statePartitions", raw)
+            with pytest.raises(
+                ValueError, match="spark_graft.stream.statePartitions"
+            ):
+                stream_state_partitions(spark)
     finally:
         spark.conf.unset("spark_graft.stream.statePartitions")
 

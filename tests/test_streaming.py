@@ -346,6 +346,25 @@ def test_running_user_stats_gate_or_run(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _upsert_sink_run(spark, in_path, schema, table, ckpt, app_id):
+    """Drive the events change stream through ``tx_upsert_stream``
+    into ``table`` (created empty first when absent)."""
+    from event_streaming_toy_example_spark.operators import txtable as tx
+
+    if not tx.table_version(table):
+        tx.tx_append(spark.createDataFrame([], schema), table)
+    changes = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 4)
+        .parquet(in_path)
+    )
+    q = tx.tx_upsert_stream(
+        changes, table, ckpt,
+        keys=["user_id"], order_by=["ts", "event_id"], app_id=app_id,
+    )
+    assert q.awaitTermination(300)
+
+
 def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
     """The streaming MERGE sink must (a) equal the batch latest-per-key
     result, (b) be a no-op when re-run over the same checkpoint, and
@@ -353,14 +372,11 @@ def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
     determinism)."""
     from pyspark.sql import functions as F
 
+    from event_streaming_toy_example_spark.operators import txtable as tx
     from event_streaming_toy_example_spark.plans.queries_ext import (
         stage_stream_input,
     )
     from event_streaming_toy_example_spark.schemas import load_table
-    from event_streaming_toy_example_spark.streaming.upsert_sink import (
-        read_state,
-        start_upsert_stream,
-    )
     from tests.conftest import SF_DIR
 
     ev = load_table(spark, SF_DIR, "events").select(
@@ -372,22 +388,12 @@ def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
     )
 
     def run(state, ckpt):
-        changes = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 4)
-            .parquet(in_path)
+        _upsert_sink_run(
+            spark, in_path, schema, str(state), str(ckpt), "upsink_test"
         )
-        q = start_upsert_stream(
-            changes,
-            state_dir=str(state),
-            checkpoint_dir=str(ckpt),
-            keys=["user_id"],
-            order_by=["ts", "event_id"],
-        )
-        q.awaitTermination(300)
         return sorted(
             tuple(r)
-            for r in read_state(spark, str(state))
+            for r in tx.read_table(spark, str(state))
             .select("user_id", "event_id")
             .collect()
         )
@@ -405,30 +411,27 @@ def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
         .collect()
     )
     assert got == want
-    # (b) same checkpoint: no new batches, state unchanged
+    # (b) same checkpoint: no new batches, no new commits, state unchanged
+    version = tx.table_version(str(tmp_path / "s1"))
     assert run(tmp_path / "s1", tmp_path / "c1") == got
+    assert tx.table_version(str(tmp_path / "s1")) == version
     # (c) fresh checkpoint + fresh state: deterministic replay
     assert run(tmp_path / "s2", tmp_path / "c2") == got
 
 
 def test_upsert_sink_time_travel_versions(spark, tmp_path):
-    """Retained generations are readable via read_state(version=...):
-    the retention window holds, version -1 equals current, earlier
-    versions are prefixes of the key history (latest-per-key row
-    counts never shrink as batches accumulate), and versions outside
-    the window raise."""
+    """Every micro-batch commit stays readable via
+    ``read_table(version=...)``: the newest version equals the current
+    read, earlier versions are prefixes of the key history
+    (latest-per-key row counts never shrink as batches accumulate),
+    and a version past the log raises."""
     import pytest
-    from pyspark.sql import functions as F
 
+    from event_streaming_toy_example_spark.operators import txtable as tx
     from event_streaming_toy_example_spark.plans.queries_ext import (
         stage_stream_input,
     )
     from event_streaming_toy_example_spark.schemas import load_table
-    from event_streaming_toy_example_spark.streaming.upsert_sink import (
-        list_versions,
-        read_state,
-        start_upsert_stream,
-    )
     from tests.conftest import SF_DIR
 
     ev = load_table(spark, SF_DIR, "events").select(
@@ -438,58 +441,27 @@ def test_upsert_sink_time_travel_versions(spark, tmp_path):
     schema = (
         "event_id bigint, ts timestamp, user_id bigint, event_type string"
     )
-    changes = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_path)
+    state = str(tmp_path / "s")
+    _upsert_sink_run(
+        spark, in_path, schema, state, str(tmp_path / "c"), "upsink_tt"
     )
-    state = tmp_path / "s"
-    q = start_upsert_stream(
-        changes,
-        state_dir=str(state),
-        checkpoint_dir=str(tmp_path / "c"),
-        keys=["user_id"],
-        order_by=["ts", "event_id"],
-        keep_generations=3,
-    )
-    assert q.awaitTermination(300)
-    versions = list_versions(str(state))
-    assert 1 <= len(versions) <= 3
-    current = sorted(
-        tuple(r) for r in read_state(spark, str(state)).collect()
-    )
+    last = tx.table_version(state)
+    assert last >= 2  # the empty create + at least one micro-batch
+    current = sorted(tuple(r) for r in tx.read_table(spark, state).collect())
     assert (
-        sorted(tuple(r) for r in read_state(spark, str(state), -1).collect())
+        sorted(
+            tuple(r)
+            for r in tx.read_table(spark, state, version=last).collect()
+        )
         == current
     )
     counts = [
-        read_state(spark, str(state), i).count()
-        for i in range(len(versions))
+        tx.read_table(spark, state, version=v).count()
+        for v in range(1, last + 1)
     ]
     assert counts == sorted(counts)  # latest-per-key never shrinks
-    with pytest.raises(IndexError, match="outside the retained window"):
-        read_state(spark, str(state), -(len(versions) + 1))
-
-
-def test_upsert_sink_rejects_zero_retention(spark, tmp_path):
-    import pytest
-
-    from event_streaming_toy_example_spark.streaming.upsert_sink import (
-        start_upsert_stream,
-    )
-
-    # validation fires before any stream machinery, so a batch frame
-    # stands in for the changes stream
-    changes = spark.range(1)
-    with pytest.raises(ValueError, match="keep_generations"):
-        start_upsert_stream(
-            changes,
-            state_dir=str(tmp_path / "s"),
-            checkpoint_dir=str(tmp_path / "c"),
-            keys=["user_id"],
-            order_by=["ts"],
-            keep_generations=0,
-        )
+    with pytest.raises(IndexError, match="outside committed range"):
+        tx.read_table(spark, state, version=last + 1)
 
 
 def test_running_user_stats_multibatch_state_carries(spark, tmp_path):

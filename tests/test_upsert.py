@@ -4,6 +4,7 @@ tombstone deletes."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from event_streaming_toy_example_spark.operators.upsert import upsert_snapshot
@@ -170,114 +171,36 @@ def test_diff_then_apply_round_trips_random_tables(spark, base_d, next_d):
 
 
 # ------------------------------------------------------------------
-# MERGE-sink crash windows (failure injection around the commit steps)
+# MERGE replay on the transactional table
 # ------------------------------------------------------------------
-
-
-def _chaos_batch(spark, rows):
-    return spark.createDataFrame(
-        rows, "k int, v string, seq int"
-    )
-
-
-def _apply(spark, state_dir, rows, batch_id=0):
-    from event_streaming_toy_example_spark.streaming import upsert_sink as us
-
-    return us.apply_merge_batch(
-        spark, state_dir, _chaos_batch(spark, rows),
-        keys=["k"], order_by=["seq"], keep_generations=3,
-        batch_id=batch_id,
-    )
-
-
-def test_crash_between_write_and_pointer_swap(spark, tmp_path, monkeypatch):
-    """A crash after the parquet write but BEFORE the pointer swap must
-    leave readers on the previous committed snapshot (never a torn
-    generation), and replay must converge."""
-    from event_streaming_toy_example_spark.streaming import upsert_sink as us
-
-    state_dir = str(tmp_path / "state")
-    _apply(spark, state_dir, [(1, "a", 1), (2, "b", 1)], batch_id=0)
-    before = sorted((r.k, r.v) for r in us.read_state(spark, state_dir).collect())
-
-    def boom(state_dir, gen):
-        raise OSError("injected crash before pointer swap")
-
-    monkeypatch.setattr(us, "_swap_pointer", boom)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="injected"):
-        _apply(spark, state_dir, [(2, "B", 2), (3, "c", 2)], batch_id=1)
-    # reader still sees the previous commit, bit-for-bit
-    assert sorted(
-        (r.k, r.v) for r in us.read_state(spark, state_dir).collect()
-    ) == before
-    assert len(us.list_versions(state_dir)) == 1
-
-    # replay (the crash left an orphan generation dir) converges
-    monkeypatch.undo()
-    _apply(spark, state_dir, [(2, "B", 2), (3, "c", 2)], batch_id=1)
-    got = sorted((r.k, r.v) for r in us.read_state(spark, state_dir).collect())
-    assert got == [(1, "a"), (2, "B"), (3, "c")]
-    # the orphan from the crashed attempt was pruned by the commit
-    import os
-
-    gens = [d for d in os.listdir(state_dir) if d.startswith("gen_")]
-    assert sorted(gens) == sorted(us.list_versions(state_dir))
-
-
-def test_crash_between_swap_and_log_append(spark, tmp_path, monkeypatch):
-    """The pointer swap IS the commit: a crash before the log append
-    must leave the NEW snapshot visible, time travel consistent (the
-    in-memory log union), and the next merge heals the log file."""
-    import os
-
-    from event_streaming_toy_example_spark.streaming import upsert_sink as us
-
-    state_dir = str(tmp_path / "state")
-    _apply(spark, state_dir, [(1, "a", 1)], batch_id=0)
-
-    def boom(state_dir, gen):
-        raise OSError("injected crash before log append")
-
-    monkeypatch.setattr(us, "_append_log", boom)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="injected"):
-        _apply(spark, state_dir, [(1, "A", 2), (2, "b", 2)], batch_id=1)
-    # the new snapshot IS committed (pointer swapped before the crash)
-    got = sorted((r.k, r.v) for r in us.read_state(spark, state_dir).collect())
-    assert got == [(1, "A"), (2, "b")]
-    # time travel stays consistent: current == newest listed version
-    versions = us.list_versions(state_dir)
-    assert len(versions) == 2
-    assert sorted(
-        (r.k, r.v)
-        for r in us.read_state(spark, state_dir, version=-1).collect()
-    ) == got
-    # ... even though the log FILE is missing the tail entry
-    with open(os.path.join(state_dir, "COMMITS")) as f:
-        on_disk = [line.strip() for line in f if line.strip()]
-    assert versions[-1] not in on_disk
-
-    # the next successful merge persists the missing log entry
-    monkeypatch.undo()
-    _apply(spark, state_dir, [(3, "c", 3)], batch_id=2)
-    with open(os.path.join(state_dir, "COMMITS")) as f:
-        healed = [line.strip() for line in f if line.strip()]
-    assert versions[-1] in healed
-    assert len(us.list_versions(state_dir)) == 3
 
 
 def test_replay_of_committed_batch_is_noop(spark, tmp_path):
     """Re-merging an already-applied batch (checkpoint replay after a
-    crash landed AFTER the commit) must not change snapshot content."""
-    from event_streaming_toy_example_spark.streaming import upsert_sink as us
+    crash landed AFTER the commit) must not change snapshot content or
+    add a commit — also when a LATER batch has landed since: the log's
+    ``(app, batch)`` floor covers every batch up to it."""
+    from event_streaming_toy_example_spark.operators import txtable as tx
 
-    state_dir = str(tmp_path / "state")
-    _apply(spark, state_dir, [(1, "a", 1), (2, "b", 1)], batch_id=0)
-    _apply(spark, state_dir, [(2, "B", 2)], batch_id=1)
-    want = sorted((r.k, r.v) for r in us.read_state(spark, state_dir).collect())
-    _apply(spark, state_dir, [(2, "B", 2)], batch_id=1)  # replay
-    got = sorted((r.k, r.v) for r in us.read_state(spark, state_dir).collect())
-    assert got == want
+    path = str(tmp_path / "state")
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "k int, v string, seq int")
+
+    def apply(rows, batch_id):
+        return tx.tx_upsert(
+            spark, path, batch(rows), ["k"], ["seq"],
+            stream_txn=("replay", batch_id),
+        )
+
+    tx.tx_append(batch([(1, "a", 1), (2, "b", 1)]), path)
+    apply([(2, "B", 2)], batch_id=1)
+    apply([(3, "c", 3)], batch_id=2)
+    version = tx.table_version(path)
+    want = sorted((r.k, r.v) for r in tx.read_table(spark, path).collect())
+    for batch_id, rows in ((1, [(2, "B", 2)]), (2, [(3, "c", 3)])):
+        with pytest.raises(tx.ConcurrentWriteError, match="already committed"):
+            apply(rows, batch_id=batch_id)  # replay
+    got = sorted((r.k, r.v) for r in tx.read_table(spark, path).collect())
+    assert got == want == [(1, "a"), (2, "B"), (3, "c")]
+    assert tx.table_version(path) == version

@@ -37,9 +37,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from event_streaming_toy_example_spark.operators import (  # noqa: E402
     matview as mv,
 )
-from event_streaming_toy_example_spark.operators import (  # noqa: E402
-    matview_join as mj,
-)
 from event_streaming_toy_example_spark.operators import txtable as tx  # noqa: E402
 from event_streaming_toy_example_spark.schemas import load_table  # noqa: E402
 from event_streaming_toy_example_spark.session import get_spark  # noqa: E402
@@ -72,14 +69,14 @@ def _refresh_peak(spark, dst: str, threshold: int,
     tracemalloc.start()
     ctx = (
         mock.patch.object(
-            mj, "_change_frames",
+            mv, "_change_frames",
             side_effect=AssertionError("driver pandas path used"),
         )
         if forbid_pandas
-        else mock.patch.object(mj, "_change_frames",
-                               wraps=mj._change_frames)
+        else mock.patch.object(mv, "_change_frames",
+                               wraps=mv._change_frames)
     )
-    with mock.patch.object(mj, "DIST_DELTA_ROWS", threshold), ctx:
+    with mock.patch.object(mv, "DIST_DELTA_ROWS", threshold), ctx:
         mv.tx_refresh_matview(spark, dst)
     _cur, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
