@@ -23,7 +23,8 @@ across engines; outputs are rounded to 6 dp anyway.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -46,6 +47,24 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
+def _vectors(arr: pa.Array) -> np.ndarray:
+    """Rows of a ``list<float|double>`` Arrow column as numpy vectors,
+    None for a null row and for a row holding a null element.  Spark's
+    folds turn a null element into a null result, while a numpy vector
+    could only carry it as NaN, which Spark treats differently (NaN
+    propagates as NaN and orders above every value)."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    rows = arr.to_pandas().to_numpy()
+    flat = pc.list_flatten(arr)
+    if flat.null_count:
+        holed = pc.list_parent_indices(arr).to_numpy()[
+            pc.is_null(flat).to_numpy(zero_copy_only=False)
+        ]
+        rows[holed] = None
+    return rows
+
+
 def cosine_batched(a: Column, b: Column) -> Column:
     """Bit-identical twin of :func:`cosine_similarity` for
     HIGH-CARDINALITY verify stages (guide §4.2): one vectorized numpy
@@ -57,29 +76,41 @@ def cosine_batched(a: Column, b: Column) -> Column:
     Bit-exactness (the rounded cosine is value-hash-checked by the
     oracle): the accumulators add ascending-j, one vectorized add per
     dimension — the same IEEE addition sequence as the sequential
-    fold; products/sqrt/divide are single IEEE ops in both engines;
-    the null/short-vector arm returns 0.0 exactly like the fold's
-    ``when(null > 0).otherwise(0.0)``.  ROUNDING stays in the JVM
+    fold; products/sqrt/divide are single IEEE ops in both engines.
+    NaN/null contract, the fold's: a null vector, a null element or an
+    empty vector gives 0.0 (``when(null > 0).otherwise(0.0)``); a NaN
+    element gives NaN, because Spark orders NaN above every value, so
+    ``NaN > 0`` takes the division arm; vectors of different lengths
+    give null (``zip_with`` pads the shorter with nulls, so the dot is
+    null) unless a zero norm takes the ``0.0`` arm.  It is an Arrow UDF,
+    not a pandas one, because pandas conversion turns a null element
+    into NaN and the two must stay apart.  ROUNDING stays in the JVM
     (callers wrap with ``F.round``): Spark rounds HALF_UP via
     BigDecimal, numpy rounds half-even, so the UDF returns the raw
     double.  Keep the interpreted fold for low-cardinality call sites
     (centroid assignment of a handful of queries, single-row scoring):
     below ~10k rows the Python round trip costs more than it saves."""
 
-    @F.pandas_udf("double")
-    def cos(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        va = sa.to_numpy()
-        vb = sb.to_numpy()
+    @F.arrow_udf("double")
+    def cos(sa: pa.Array, sb: pa.Array) -> pa.Array:
+        va = _vectors(sa)
+        vb = _vectors(sb)
         n = len(va)
         out = np.zeros(n, dtype=np.float64)
-        good = [
-            i
-            for i in range(n)
-            if va[i] is not None
-            and vb[i] is not None
-            and len(va[i]) == len(vb[i])
-            and len(va[i]) > 0
-        ]
+        null = np.zeros(n, dtype=bool)
+        good = []
+        for i in range(n):
+            if va[i] is None or vb[i] is None:
+                continue
+            if len(va[i]) != len(vb[i]):
+                # the sign of a sum of squares does not depend on its
+                # addition order, so any norm decides the arm
+                d = np.linalg.norm(va[i].astype(np.float64)) * np.linalg.norm(
+                    vb[i].astype(np.float64)
+                )
+                null[i] = d > 0 or np.isnan(d)
+            elif len(va[i]) > 0:
+                good.append(i)
         if good:
             # uniform dim in every caller; group by length anyway so a
             # mixed batch cannot mis-stack
@@ -104,10 +135,10 @@ def cosine_batched(a: Column, b: Column) -> Column:
                     daa += x * x
                     dbb += y * y
                 denom = np.sqrt(daa) * np.sqrt(dbb)
-                pos = denom > 0  # False for NaN, like when(NaN > 0)
+                pos = (denom > 0) | np.isnan(denom)  # NaN > 0 in Spark
                 vals = np.where(pos, dab / np.where(pos, denom, 1.0), 0.0)
                 out[np.asarray(idxs, dtype=np.int64)] = vals
-        return pd.Series(out)
+        return pa.array(out, mask=null)
 
     return cos(a, b)
 
@@ -212,7 +243,7 @@ def _plane_matrix(dim: int, bits: int, seed: int) -> list[list[float]]:
 
 
 def _rhp_signatures_udf(dim: int, bits: int, seeds: list[int]):
-    """Vectorized-numpy pandas UDF computing, per vector, the b-bit
+    """Vectorized-numpy Arrow UDF computing, per vector, the b-bit
     hyperplane signature against one plane matrix PER SEED — returned
     as ``array<long>`` of ``len(seeds)`` signatures.
 
@@ -232,11 +263,13 @@ def _rhp_signatures_udf(dim: int, bits: int, seeds: list[int]):
     sequential Catalyst fold ``((0 + v0*c0) + v1*c1) + ...``; plane
     coefficients are exactly ±1.0, vectors are upcast to double before
     the product — both identical to the old expression.  Null/NaN
-    semantics also match: a null element becomes NaN (pyarrow), NaN
-    propagates, ``NaN >= 0`` is False, so the affected vector signs to
-    all-zero bits exactly like the old ``when(null >= 0).otherwise(0)``
-    arm; a null or wrong-length vector signs to 0 like the old
-    null-padded ``zip_with``."""
+    semantics also match: a NaN element propagates to every partial sum
+    and ``NaN >= 0`` is true in Spark (NaN orders above every value), so
+    such a vector signs to all-one bits; a null element makes every
+    partial sum null, so the vector signs to all-zero bits like the old
+    ``when(null >= 0).otherwise(0)`` arm, and so does a null or
+    wrong-length vector (the old null-padded ``zip_with``).  An Arrow
+    UDF keeps a null element apart from NaN (see :func:`_vectors`)."""
     # each: dim x bits of ±1 (transposed so the j-loop strides rows)
     mats = [
         np.ascontiguousarray(
@@ -255,13 +288,13 @@ def _rhp_signatures_udf(dim: int, bits: int, seeds: list[int]):
                 acc += block[:, j : j + 1] * mat[j]
             sig = np.zeros(n, dtype=np.int64)
             for b in range(bits):  # MSB-first fold: acc*2 + bit
-                sig = sig * 2 + (acc[:, b] >= 0)
+                sig = sig * 2 + ((acc[:, b] >= 0) | np.isnan(acc[:, b]))
             out[:, t] = sig
         return out
 
-    @F.pandas_udf("array<long>")
-    def sigs(vecs: pd.Series) -> pd.Series:
-        vals = vecs.to_numpy()
+    @F.arrow_udf("array<long>")
+    def sigs(vecs: pa.Array) -> pa.Array:
+        vals = _vectors(vecs)
         out = np.zeros((len(vals), n_tables), dtype=np.int64)
         good = [
             i
@@ -273,7 +306,8 @@ def _rhp_signatures_udf(dim: int, bits: int, seeds: list[int]):
                 np.float64, copy=False
             )
             out[np.asarray(good, dtype=np.int64)] = _compute(block)
-        return pd.Series(list(out))
+        offsets = np.arange(0, out.size + 1, n_tables, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, out.reshape(-1))
 
     return sigs
 

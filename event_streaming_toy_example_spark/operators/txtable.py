@@ -75,7 +75,7 @@ import time as _time
 import uuid
 from collections.abc import Sequence
 from collections import OrderedDict as _OrderedDict
-from dataclasses import dataclass
+from dataclasses import dataclass, replace as _replace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -478,20 +478,36 @@ def _fold_state_memo(path: str, version: int) -> _State | None:
     of a deleted-and-recreated table misses instead of serving wrong
     prior state.  True LRU (hits move to the back of the eviction
     order) and lock-guarded — the streaming feed reader and a
-    concurrent batch reader may share the driver process."""
+    concurrent batch reader may share the driver process.  Every
+    caller gets its own shallow copy of the state's containers, so a
+    caller that edits its state cannot change what the memo serves
+    next."""
     ident = _version_identity(path, version)
     key = (path, version, ident)
     with _FOLD_MEMO_LOCK:
         hit = _FOLD_MEMO.get(key)
         if hit is not None:
             _FOLD_MEMO.move_to_end(key)
-            return hit
+            return _copy_state(hit)
     state = _fold_state_uncached(path, version)
     with _FOLD_MEMO_LOCK:
         while len(_FOLD_MEMO) >= 256:
             _FOLD_MEMO.popitem(last=False)
         _FOLD_MEMO[key] = state
-    return state
+    return _copy_state(state)
+
+
+def _copy_state(state: _State | None) -> _State | None:
+    if state is None:
+        return None
+    return _replace(
+        state,
+        files=dict(state.files),
+        dvs=dict(state.dvs),
+        properties=dict(state.properties),
+        stream_txns=dict(state.stream_txns),
+        protocol=dict(state.protocol),
+    )
 
 
 def invalidate_fold_memo(path: str | None = None) -> None:

@@ -19,10 +19,16 @@ state the way a production system must; choosing a watermark at least
 as long as the test horizon reproduces the reference's observable
 behavior exactly, and the delta is documented here rather than hidden.
 
-At scale: use the RocksDB state store
+State store: the default in-heap HDFS-backed provider.  RocksDB with
+changelog checkpointing
 (``spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider``)
-— dedup state for ~1M events/hour x 24h watermark is ~24M keys, far
-beyond the default in-heap HDFS-backed store's comfort zone.
+was measured on the live ingest benchmark (``perfbench`` ``ingest_live``,
+4-core VM) and was slower: 1,042 ms a trigger against 851 ms, both
+under Spark's default checkpoint manager, because its commit file sync
+(``rocksdbCommitFileSyncLatencyMs``, about 395 ms a batch) goes through
+the same forked-``chmod`` checkpoint writes that local sessions now
+avoid (``session.get_spark``).  Revisit it when dedup state outgrows the
+executor heap: ~1M events/hour x a 24 h watermark is ~24M keys.
 """
 
 from __future__ import annotations

@@ -2,32 +2,44 @@
 
 A streaming query's stateful operators create one state-store instance
 per shuffle partition, and every micro-batch pays a fixed per-store
-commit cost — delta-file create + write + rename (plus provider load
-and maintenance bookkeeping) per store per batch — regardless of how
-many rows the partition carries.  Batch queries get their effective
-shuffle width coalesced at runtime by AQE; streaming state partitioning
-is pinned into the checkpoint at query start and never coalesced, so
-inheriting the batch ``spark.sql.shuffle.partitions`` over-partitions
-the state store whenever per-batch state volume is small relative to
-the configured width.
+commit cost — one atomic delta-file write (create, write, rename) plus
+provider load and maintenance bookkeeping per store per batch —
+regardless of how many rows the partition carries.  Most of that cost
+was the checkpoint writer, not the store: without libhadoop every
+``setPermission`` on the local file system forks a ``chmod``, and
+Spark's default FileContext-based checkpoint manager sets permissions
+several times per atomic write (43-52 ms a write against 16-19 ms with
+the FileSystem-based manager that local sessions now use, see
+``session.get_spark`` and ``tools/checkpoint_write_probe.py``).  Batch
+queries get their effective shuffle width coalesced at runtime by AQE;
+streaming state partitioning is pinned into the checkpoint at query
+start and never coalesced, so inheriting the batch
+``spark.sql.shuffle.partitions`` over-partitions the state store
+whenever per-batch state volume is small relative to the configured
+width.
 
-Measured on this workload (sf0.1, local[32], 3-run medians; the
-per-batch breakdown in ``tools/stream_profile.py`` attributes the gap
-to ``stateOperators.commitTimeMs``):
+Measured on this workload (sf0.1, local[32] on 4 cores, 3-run medians,
+``tools/time_entries.py``; state width 8 / 32; the per-batch breakdown
+in ``tools/stream_profile.py`` attributes the gap to
+``stateOperators.commitTimeMs``):
 
-====================  ==========  =========  =====
-entry                 32 parts    8 parts    ratio
-====================  ==========  =========  =====
-stream_join_outer       13.8 s      3.0 s     4.6x
-stream_session_window    5.3 s      1.6 s     3.3x
-stream_running_stats     8.4 s      4.3 s     2.0x
-pysource_stream_agg      7.4 s      4.3 s     1.7x
-tx_stream_source         3.1 s      2.3 s     1.3x
-stream_cep_pattern      15.0 s     24.1 s     0.6x  (REGRESSION)
-====================  ==========  =========  =====
+=====================  =================  =====================
+entry                  default manager    FileSystem-based
+                       8 / 32             8 / 32
+=====================  =================  =====================
+stream_join_outer      5.09 / 12.80 s     3.13 / 5.70 s
+stream_session_window  3.02 / 5.14 s      2.10 / 3.33 s
+stream_hourly_counts   1.39 / 2.24 s      1.13 / 2.11 s
+=====================  =================  =====================
 
-The last row is the design constraint: entries whose micro-batch work
-is Python-compute-bound (``applyInPandasWithState`` over many/large
+Narrowing the width still pays after the manager switch (1.8x on
+``stream_join_outer``), so the per-store cost is smaller but not gone.
+
+An earlier measurement under the default manager (local[32], the
+same 32 and 8 widths) showed the limit of narrowing:
+``stream_cep_pattern`` ran 15.0 s at 32 and 24.1 s at 8, a regression.
+That is the design constraint: entries whose micro-batch work is
+Python-compute-bound (``applyInPandasWithState`` over many/large
 groups) need the full batch width for worker parallelism — for those,
 pass ``python_heavy=True`` and the width is left alone.
 

@@ -218,6 +218,100 @@ def test_cosine_known_values(spark):
     assert v == pytest.approx(0.7071067811865475)
 
 
+_NAN = float("nan")
+_INF = float("inf")
+#: NaN/null-bearing vector pairs: each row is one edge of the contract
+_EDGE_PAIRS = [
+    ([1.0, 2.0, 3.0], [0.5, -1.0, 2.0]),
+    ([1.0, _NAN, 3.0], [0.5, -1.0, 2.0]),
+    ([1.0, 2.0, 3.0], [_NAN, _NAN, _NAN]),
+    ([_NAN, 0.0, 0.0], [0.0, 0.0, 0.0]),
+    ([_INF, 1.0, 0.0], [0.0, 0.0, 0.0]),
+    ([_INF, 1.0, 0.0], [1.0, 0.0, 0.0]),
+    ([1.0, None, 3.0], [0.5, -1.0, 2.0]),
+    ([None, _NAN, 3.0], [0.5, -1.0, 2.0]),
+    (None, [0.5, -1.0, 2.0]),
+    ([], []),
+    ([0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),
+    ([1.0, 2.0], [0.5, -1.0, 2.0]),
+    ([0.0, 0.0], [0.5, -1.0, 2.0]),
+    ([1.0, _NAN], [0.5, -1.0, 2.0]),
+    ([-1.0, -2.0, -3.0], [1.0, 1.0, 1.0]),
+]
+
+
+def _same(x, y) -> bool:
+    if x is None or y is None:
+        return x is y
+    return (x != x and y != y) or x == y
+
+
+def test_cosine_batched_matches_the_fold_on_nan_and_null(spark):
+    """The numpy twin and the Catalyst fold agree bit for bit on NaN,
+    infinite, null-element, null, empty and mismatched-length inputs:
+    Spark orders NaN above every value, so ``NaN > 0`` takes the
+    division arm, while a null element takes the ``0.0`` arm."""
+    from event_streaming_toy_example_spark.functions.similarity import (
+        cosine_batched,
+    )
+
+    df = spark.createDataFrame(
+        list(enumerate(_EDGE_PAIRS)),
+        "i int, ab struct<a: array<float>, b: array<float>>",
+    ).select("i", "ab.a", "ab.b")
+    rows = df.select(
+        "i",
+        cosine_similarity(F.col("a"), F.col("b")).alias("fold"),
+        cosine_batched(F.col("a"), F.col("b")).alias("twin"),
+    ).collect()
+    assert len(rows) == len(_EDGE_PAIRS)
+    diff = [(r.i, r.fold, r.twin) for r in rows if not _same(r.fold, r.twin)]
+    assert not diff, diff
+    by_i = {r.i: r.twin for r in rows}
+    assert by_i[1] != by_i[1]  # a NaN element gives NaN, not 0.0
+    assert by_i[6] == 0.0 and by_i[7] == 0.0  # a null element gives 0.0
+    assert by_i[11] is None  # zip_with null-pads the shorter vector
+
+
+def test_hyperplane_signature_matches_the_fold_on_nan_and_null(spark):
+    """The numpy signature twin equals the Catalyst fold it replaced,
+    ``when(sum(v_j * plane_j) >= 0, 1).otherwise(0)`` per bit, folded
+    MSB first: a NaN element signs to all-one bits, a null element to
+    all-zero bits."""
+    from event_streaming_toy_example_spark.functions.similarity import (
+        _plane_matrix,
+        with_hyperplane_signature,
+    )
+
+    dim, bits, seed = 3, 6, 42
+    df = spark.createDataFrame(
+        [(i, a) for i, (a, _) in enumerate(_EDGE_PAIRS)], "i int, vec array<float>"
+    )
+    fold = F.lit(0).cast("long")
+    for plane in _plane_matrix(dim, bits, seed):
+        acc = F.aggregate(
+            F.zip_with(
+                F.col("vec"),
+                F.array(*[F.lit(c) for c in plane]),
+                lambda x, y: x.cast("double") * y,
+            ),
+            F.lit(0.0),
+            lambda s, x: s + x,
+        )
+        fold = fold * 2 + F.when(acc >= 0, 1).otherwise(0)
+    rows = (
+        with_hyperplane_signature(df, "vec", dim, bits=bits, seed=seed)
+        .select("i", "bucket", fold.alias("fold"))
+        .collect()
+    )
+    assert len(rows) == len(_EDGE_PAIRS)
+    diff = [(r.i, r.fold, r.bucket) for r in rows if r.fold != r.bucket]
+    assert not diff, diff
+    by_i = {r.i: r.bucket for r in rows}
+    assert by_i[1] == 2**bits - 1 and by_i[3] == 2**bits - 1
+    assert by_i[6] == 0 and by_i[7] == 0 and by_i[8] == 0
+
+
 def test_brute_force_topk(spark, embs):
     queries = embs.limit(3)
     out = brute_force_topk(embs, queries, k=4).collect()

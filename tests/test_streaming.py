@@ -532,3 +532,83 @@ def test_running_user_stats_multibatch_state_carries(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _resolved_checkpoint_manager(spark, path: str) -> str:
+    jvm = spark._jvm
+    mgr = getattr(jvm, _CKPT_PKG + "CheckpointFileManager").create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return mgr.getClass().getName()
+
+
+def test_local_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
+    """Local sessions write streaming checkpoints through the
+    FileSystem-based manager (no forked ``chmod`` per write without
+    libhadoop).  Resolving the class by name here fails loudly if a
+    pyspark upgrade renames or moves it."""
+    assert (
+        _resolved_checkpoint_manager(spark, str(tmp_path))
+        == _CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_checkpoint_from_default_manager_restarts_exactly_once(spark, tmp_path):
+    """A checkpoint written under Spark's default (FileContext-based)
+    manager restarts under the session's manager: the offset, commit
+    and dedup state written before the switch are read back, so a
+    replayed record is still deduplicated and every event is staged
+    exactly once."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "incoming")
+    staging = str(tmp_path / "staging")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = spark.readStream.schema("record string").text(
+            src
+        ).withColumnRenamed("value", "record")
+        q = start_ingest_stream(
+            stream, staging, ckpt, watermark="365 days", available_now=True
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+
+    first = generate_events(spark, 150, seed=31)
+    first_feed = wrap_kinesis_envelope(inject_duplicates(first, rate=0.1, seed=31))
+    first_feed.write.mode("overwrite").text(src)
+    session_manager = spark.conf.get(_CKPT_MANAGER_KEY, None)
+    spark.conf.set(_CKPT_MANAGER_KEY, _CKPT_PKG + "FileContextBasedCheckpointFileManager")
+    try:
+        assert _resolved_checkpoint_manager(spark, ckpt).endswith(
+            "FileContextBasedCheckpointFileManager"
+        )
+        run()
+    finally:
+        if session_manager is None:
+            spark.conf.unset(_CKPT_MANAGER_KEY)
+        else:
+            spark.conf.set(_CKPT_MANAGER_KEY, session_manager)
+    assert spark.read.json(staging).count() == 150
+
+    second = generate_events(spark, 100, seed=32)
+    assert not {r.event_uuid for r in first.select("event_uuid").collect()} & {
+        r.event_uuid for r in second.select("event_uuid").collect()
+    }
+    # new events plus a replay of every first-run record
+    wrap_kinesis_envelope(second).unionByName(first_feed).write.mode(
+        "append"
+    ).text(src)
+    run()
+
+    staged = spark.read.json(staging)
+    per_event = staged.groupBy("event_uuid").count()
+    assert staged.count() == 250
+    assert per_event.count() == 250
+    assert per_event.where(F.col("count") != 1).count() == 0

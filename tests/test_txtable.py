@@ -61,6 +61,28 @@ def test_snapshot_isolation_reader_pinned_before_later_commits(
     assert _content(spark, p) == [(1, 2, "a2"), (2, 1, "b")]
 
 
+def test_fold_memo_hands_each_caller_its_own_state(spark, tmp_path):
+    """A caller that edits the folded state it got back must not change
+    what the fold memo serves the next reader of the same version."""
+    p = str(tmp_path / "t")
+    tx.tx_append(_df(spark, [(1, 1, "a")]), p)
+    tx.tx_append(_df(spark, [(2, 1, "b")]), p)
+    before = tx.snapshot(p, 2)
+    tx.invalidate_fold_memo(p)
+    for _ in range(2):  # the first fold is a memo miss, the second a hit
+        state = tx._fold_state(p, 2)
+        state.files.clear()
+        state.dvs["x.parquet"] = "dv.parquet"
+        state.properties["k"] = "v"
+        state.stream_txns["app"] = 7
+        state.protocol["min_reader_features"] = ["bogus"]
+    assert before.files and tx.snapshot(p, 2) == before
+    again = tx._fold_state(p, 2)
+    assert not again.dvs and not again.stream_txns
+    assert "k" not in again.properties
+    assert again.protocol.get("min_reader_features") != ["bogus"]
+
+
 def test_upsert_merge_semantics_and_time_travel(spark, tmp_path):
     p = str(tmp_path / "t")
     tx.tx_append(_df(spark, [(1, 1, "a"), (2, 1, "b")]), p)
