@@ -88,23 +88,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def lsh_bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Split a signature into bands; band key = joined slice. Returns
-    array<struct<band_idx:int, band_key:string>> for posexplode-style
-    fan-out."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.array_join(
-                    F.slice(sig, b * rows_per_band + 1, rows_per_band), "|"
-                ).alias("band_key"),
-            )
-            for b in range(num_bands)
-        ]
-    )
-
-
 def shingle_rows(
     df: DataFrame,
     id_col: str = "doc_id",

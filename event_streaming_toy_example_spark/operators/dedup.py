@@ -32,16 +32,6 @@ def count_duplicate_keys(df: DataFrame, key: str = "event_uuid") -> int:
     )
 
 
-def duplicate_key_stats(df: DataFrame, key: str = "event_uuid") -> DataFrame:
-    """A1 as a DataFrame (for the query catalog): one row with the
-    duplicate-key count and the number of surplus rows."""
-    per_key = df.groupBy(key).agg(F.count(F.lit(1)).alias("cnt"))
-    return per_key.agg(
-        F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).cast("long").alias("dup_keys"),
-        F.sum(F.col("cnt") - 1).cast("long").alias("surplus_rows"),
-    )
-
-
 def dedup_exact(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """D2: exact dedup, arbitrary survivor — Spark's ``dropDuplicates``.
     Matches the reference's batch dedup (which passes a bare string;

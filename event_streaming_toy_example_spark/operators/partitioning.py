@@ -12,7 +12,7 @@ count per partition is left to AQE coalescing — at 100 TB you tune
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from event_streaming_toy_example_spark.sources.ndjson import with_time_partitions
 
@@ -72,13 +72,3 @@ def write_processed_parquet(
     if compression:
         writer = writer.option("compression", compression)
     writer.partitionBy(*PROCESSED_PARTITION_COLS).parquet(path)
-
-
-def read_processed_parquet(spark: SparkSession, path: str,
-                           where: str | None = None) -> DataFrame:
-    """Read the processed store; partition-column predicates prune
-    directories (no manual glob)."""
-    df = spark.read.parquet(path)
-    if where:
-        df = df.where(where)
-    return df

@@ -559,8 +559,13 @@ def snapshot(path: str, version: int | None = None) -> Snapshot | None:
     beyond the log, and :class:`VersionExpiredError` for one dropped
     by :func:`expire_log`."""
     state = _fold_state(path, version)
-    if state is None:
-        return None
+    return None if state is None else _state_snapshot(state)
+
+
+def _state_snapshot(state: _State) -> Snapshot:
+    """The :class:`Snapshot` view of a folded state — a writer that
+    already holds its read version's state builds it here instead of
+    folding the log a second time."""
     return Snapshot(
         version=state.version,
         files=tuple(state.files),
@@ -568,6 +573,16 @@ def snapshot(path: str, version: int | None = None) -> Snapshot | None:
         stats={f: s for f, s in state.files.items() if s is not None},
         dvs=dict(state.dvs) or None,
     )
+
+
+def _fold_for_write(path: str, op: str) -> tuple[_State, Snapshot]:
+    """The row-level DML preamble: ONE fold of the latest version (the
+    write's read version) and its snapshot.  ``op`` names the caller in
+    the error a table with no commits raises."""
+    state = _fold_state(path)
+    if state is None:
+        raise ValueError(f"{op} on a table with no commits: {path}")
+    return state, _state_snapshot(state)
 
 
 def _dv_positions_df(
@@ -1932,8 +1947,7 @@ def prune_files(
     snap = snapshot(path, version)
     if snap is None:
         return [], []
-    pm = _phys_map(snap.schema)
-    phys_where = [(_phys_clause_col(pm, c), op, v) for c, op, v in where]
+    phys_where = _phys_where(snap.schema, where)
     scan, skip = [], []
     for f in snap.files:
         fstats = (snap.stats or {}).get(f)
@@ -2334,10 +2348,6 @@ def commit(
 # ----------------------------------------------------- table operations
 
 
-def _schema_json(df: DataFrame) -> str:
-    return df.schema.json()
-
-
 # ----------------------------------------------------- column mapping
 #
 # Stable PHYSICAL names per column (Delta column-mapping semantics):
@@ -2411,6 +2421,13 @@ def _phys_clause_col(pm: dict, col: str) -> str:
     if m:
         return f"{m.group(1)}({pm.get(m.group(2), m.group(2))})"
     return pm.get(col, col)
+
+
+def _phys_where(schema_json: str, where: Sequence[tuple]) -> list[tuple]:
+    """A ``(col, op, value)`` clause list with every column physical —
+    the form log stats and commit conflict domains are keyed by."""
+    pm = _phys_map(schema_json)
+    return [(_phys_clause_col(pm, c), op, v) for c, op, v in where]
 
 
 def _check_evolution(existing_schema: str, df: DataFrame) -> DataFrame:
@@ -2573,6 +2590,180 @@ def _probe_rel(path: str, uri: str) -> str:
     return norm
 
 
+# ------------------------------------------------ shared DML write steps
+#
+# The row-level DML operations (tx_delete, tx_delete_keys, tx_update,
+# tx_merge, tx_upsert) differ in which rows they touch and what they
+# write back; the steps below are the ones they share, so a fix to
+# probe, DV or conflict accounting lands once for all of them.
+
+
+def _probe_files(
+    spark: SparkSession,
+    path: str,
+    snap: Snapshot,
+    probe: DataFrame,
+    keys: Sequence[str],
+) -> list[str]:
+    """Key probe -> affected files: the snapshot files (sorted, in the
+    snapshot's name space) that might hold one of ``probe``'s keys.
+
+    The probe runs over a DV-free read of the snapshot files projected
+    to the logged schema (``input_file_name`` is only defined at the
+    scan and survives the column-mapping projection).  A DV'd-out row
+    still counting as "affected" merely rewrites or DVs a file that no
+    longer holds the key's live row — wasteful at worst, never
+    wrong."""
+    current = _read_files(spark, path, snap.files, schema_json=snap.schema)
+    probed = upsert_prune_probe(current, probe, keys).collect()
+    # own files relative, clone-external refs absolute (_probe_rel)
+    affected = sorted({_probe_rel(path, r["f"]) for r in probed})
+    assert set(affected) <= set(snap.files), (
+        "pruning probe returned files outside the snapshot"
+    )
+    return affected
+
+
+def _rewrite_bytes(
+    path: str, affected: Sequence[str], batch: DataFrame
+) -> int | None:
+    """Output sizing of a keyed rewrite: its bytes are bounded by the
+    affected files (store metadata) plus the incoming batch (Catalyst
+    estimate); unknown only when there is neither."""
+    est = _plan_size_estimate(batch)
+    if not affected and est is None:
+        return None
+    return _live_bytes(path, affected) + (est or 0)
+
+
+def _key_conflict(
+    df: DataFrame, keys: Sequence[str], schema_json: str
+) -> dict | None:
+    """The key bounding-box conflict domain of a keyed write: one tiny
+    aggregate over the (small) key-carrying batch lets :func:`commit`
+    prove a concurrent append key-disjoint instead of aborting.
+    ``{"kind": "empty"}`` for an empty batch; None (strict validation)
+    when no key column has an indexable range.  Ranges are keyed by
+    PHYSICAL column names: commit stats are physical, and physical
+    names survive concurrent renames."""
+    bounds = df.agg(
+        F.count(F.lit(1)).alias("__n"),
+        *[
+            agg
+            for k in keys
+            for agg in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
+        ],
+    ).collect()[0]
+    if bounds["__n"] == 0:
+        return {"kind": "empty"}
+    pm = _phys_map(schema_json)
+    ranges = {}
+    for k in keys:
+        lo = _norm_stat(bounds[f"__lo_{k}"])
+        hi = _norm_stat(bounds[f"__hi_{k}"])
+        ranges[pm.get(k, k)] = None if lo is None or hi is None else [lo, hi]
+    if any(v is not None for v in ranges.values()):
+        return {"kind": "keys", "ranges": ranges}
+    return None
+
+
+def _dv_or_drop(
+    spark: SparkSession,
+    path: str,
+    snap: Snapshot,
+    doomed: DataFrame,
+    files: Sequence[str],
+    pos_cols: tuple[str, str] = ("__f", "__p"),
+) -> tuple[list[str], dict | None]:
+    """The merge-on-read removal step: ``doomed`` holds the rows
+    leaving ``files``, tagged with their (file, position) in
+    ``pos_cols`` (``_read_files(file_pos_cols=...)``).  Their positions
+    are unioned with those files' EXISTING deletion vectors (a sidecar
+    is cumulative: the current mapping alone describes the live rows)
+    and counted per file against the file's physical rows.  A file
+    left with no live row drops whole; ONE new sidecar covers every
+    other file that has a hole.  Returns ``(files to remove, commit dv
+    mapping or None)``.
+
+    ``doomed`` may come from a raw read or a DV-applied one: an
+    already-dead position is in the old sidecar, and the union
+    dedups it."""
+    fcol, pcol = pos_cols
+    doomed = doomed.select(
+        F.col(fcol).alias("file"), F.col(pcol).alias("pos")
+    )
+    in_play = frozenset(files)
+    existing = {f: s for f, s in (snap.dvs or {}).items() if f in in_play}
+    if existing:
+        doomed = doomed.unionByName(
+            _dv_positions_df(spark, path, existing)
+        ).distinct()
+    doomed = doomed.persist()
+    try:
+        per_file = {
+            r["file"]: r["n"]
+            for r in doomed.groupBy("file")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        fully = [
+            f for f in files if per_file.get(f, 0) == _parquet_rows(path, f)
+        ]
+        dv_files = sorted(
+            f for f in per_file.keys() | existing.keys() if f not in fully
+        )
+        dv_commit = None
+        if dv_files:
+            sidecar = _stage_dv(
+                doomed.where(F.col("file").isin(dv_files)), path
+            )
+            dv_commit = {f: sidecar for f in dv_files}
+    finally:
+        doomed.unpersist()
+    return fully, dv_commit
+
+
+def _stage_rewrite(
+    df: DataFrame, path: str, schema_json: str, est_bytes: int | None
+) -> tuple[list[str], dict]:
+    """Copy-on-write staging of a rewrite that may delete every row:
+    stage ``df`` sized by ``est_bytes``, read the footer stats, and
+    delete the zero-row files an all-deleted rewrite leaves behind.
+    Returns ``(added files, their stats)``."""
+    staged = _stage_files(_sized_for_write(df, est_bytes), path, schema_json)
+    stats = _footer_stats(path, staged)
+    added = []
+    for f in staged:
+        if _parquet_rows(path, f) == 0:
+            get_data_store(path).delete(os.path.join(path, f))
+        else:
+            added.append(f)
+    return added, {f: s for f, s in stats.items() if f in added}
+
+
+def _split_whole(
+    path: str, snap: Snapshot, where: Sequence[tuple]
+) -> tuple[list[tuple], list[str], list[str]]:
+    """Stats split of the files a clause list may match:
+    ``(physical clauses, whole, straddle)``.  Files whose logged stats
+    prove EVERY row matches (``whole``) can be dropped without being
+    opened; the may-match rest (``straddle``) must be read.  Files the
+    stats prove disjoint are in neither list."""
+    candidates, _pruned = prune_files(path, where, snap.version)
+    fstats = snap.stats or {}
+    phys_where = _phys_where(snap.schema, where)
+    whole = [
+        f
+        for f in candidates
+        if all(
+            _clause_all_match(fstats.get(f), c, op, v)
+            for c, op, v in phys_where
+        )
+    ]
+    whole_set = frozenset(whole)
+    return phys_where, whole, [f for f in candidates if f not in whole_set]
+
+
 def tx_upsert(
     spark: SparkSession,
     path: str,
@@ -2615,30 +2806,9 @@ def tx_upsert(
         upsert_snapshot,
     )
 
-    state = _fold_state(path)
-    if state is None:
-        raise ValueError(f"tx_upsert on a table with no commits: {path}")
-    read_version = state.version
-    snap = snapshot(path, read_version)
+    state, snap = _fold_for_write(path, "tx_upsert")
     changes = _check_evolution(state.schema, changes)
-
-    # probe over a DV-free read of the snapshot files (input_file_name
-    # is only defined at the scan and survives the column-mapping
-    # projection; a DV'd-out row still counting as "affected" merely
-    # rewrites/DVs a file that no longer holds the key's live row —
-    # wasteful at worst, never wrong)
-    current = _read_files(
-        spark, path, snap.files, schema_json=state.schema
-    )
-    affected_paths = {
-        r["f"] for r in upsert_prune_probe(current, changes, keys).collect()
-    }
-    # map input_file_name URIs back into snapshot name space (own files
-    # relative, clone-external refs absolute — _probe_rel)
-    affected = sorted({_probe_rel(path, p) for p in affected_paths})
-    assert set(affected) <= set(snap.files), (
-        "pruning probe returned files outside the snapshot"
-    )
+    affected = _probe_files(spark, path, snap, changes, keys)
     union_schema = _union_schema(
         state.schema, changes, state.properties.get("__retired_phys", ())
     )
@@ -2646,15 +2816,7 @@ def tx_upsert(
     changes = _align(changes, union_schema)
     _check_constraints(changes, state.properties, "the MERGE batch")
     change_keys = F.broadcast(changes.select(*keys).distinct())
-    # output sizing: the rewrite's bytes are bounded by the affected
-    # files (store metadata) plus the change batch (Catalyst estimate);
-    # unknown only when there is neither
-    _ch_est = _plan_size_estimate(changes)
-    rewrite_est = (
-        None
-        if not affected and _ch_est is None
-        else _live_bytes(path, affected) + (_ch_est or 0)
-    )
+    rewrite_est = _rewrite_bytes(path, affected, changes)
     if merge_on_read and affected:
         # DV the LIVE rows holding changed keys; merge only those with
         # the changes into ONE new file; untouched rows stay in place
@@ -2664,35 +2826,17 @@ def tx_upsert(
         )
         touched_meta = base.join(change_keys, list(keys), "left_semi").persist()
         try:
-            doomed = touched_meta.select(
-                F.col("__f").alias("file"), F.col("__p").alias("pos")
-            )
             touched = _align(touched_meta.drop("__f", "__p"), union_schema)
             merged = upsert_snapshot(touched, changes, keys, order_by)
-            doomed_files = {
-                r["file"] for r in doomed.select("file").distinct().collect()
-            }
-            # the sidecar must carry each mapped file's FULL cumulative
-            # DV (current mapping alone describes the live rows)
-            existing = {
-                f: s
-                for f, s in (snap.dvs or {}).items()
-                if f in set(affected) and (f in doomed_files)
-            }
-            dv_rows = doomed
-            if existing:
-                dv_rows = dv_rows.unionByName(
-                    _dv_positions_df(spark, path, existing)
-                ).distinct()
-            if doomed_files:
-                sidecar = _stage_dv(dv_rows, path)
-                dv_commit = {f: sidecar for f in sorted(doomed_files)}
+            # nothing rewritten: only files left with no live row leave
+            affected, dv_commit = _dv_or_drop(
+                spark, path, snap, touched_meta, affected
+            )
             files = _stage_files(
                 _sized_for_write(merged, rewrite_est), path, union_schema
             )
         finally:
             touched_meta.unpersist()
-        affected = []  # nothing rewritten: removals are all DV-borne
     else:
         if affected:
             base = _read_files(
@@ -2717,35 +2861,6 @@ def tx_upsert(
         files = _stage_files(
             _sized_for_write(merged, rewrite_est), path, union_schema
         )
-    # conflict domain: the change-key bounding box (one tiny agg over
-    # the small MERGE batch) — lets commit() prove a concurrent append
-    # key-disjoint instead of aborting
-    bounds = changes.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[
-            agg
-            for k in keys
-            for agg in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
-        ],
-    ).collect()[0]
-    if bounds["__n"] == 0:
-        conflict: dict | None = {"kind": "empty"}
-    else:
-        # ranges are keyed by PHYSICAL column names: commit stats are
-        # physical, and physical names survive concurrent renames
-        pm = _phys_map(union_schema)
-        ranges = {}
-        for k in keys:
-            lo = _norm_stat(bounds[f"__lo_{k}"])
-            hi = _norm_stat(bounds[f"__hi_{k}"])
-            ranges[pm.get(k, k)] = (
-                None if lo is None or hi is None else [lo, hi]
-            )
-        conflict = (
-            {"kind": "keys", "ranges": ranges}
-            if any(v is not None for v in ranges.values())
-            else None  # no indexable key column: strict validation
-        )
     return _commit_and_maintain(
         spark,
         path,
@@ -2753,10 +2868,10 @@ def tx_upsert(
         files,
         affected,
         union_schema,
-        read_version,
+        state.version,
         stream_txn=stream_txn,
         stats=_footer_stats(path, files),
-        conflict=conflict,
+        conflict=_key_conflict(changes, keys, union_schema),
         dv=dv_commit,
     )
 
@@ -2805,10 +2920,11 @@ def tx_merge(
     live target row, so every live file joins (the clause's cost IS
     the semantics — prefer ``merge_on_read=True`` there, which turns
     the rewrite into O(changed rows) deletion-vector bytes + one new
-    file).  Concurrency mirrors :func:`tx_upsert`: the source-key
-    bounding box is the conflict domain, so key-disjoint concurrent
-    appends commute — but a ``by_source`` merge reads the whole table
-    and validates STRICTLY (any concurrent data change aborts).
+    file).  Concurrency: the source-key bounding box
+    (:func:`_key_conflict`) is the conflict domain, so key-disjoint
+    concurrent appends commute — but a ``by_source`` merge reads the
+    whole table and validates STRICTLY (any concurrent data change
+    aborts).
 
     Duplicate source keys are refused up front (a target row matching
     two source rows makes the result order-dependent — same error
@@ -2834,11 +2950,7 @@ def tx_merge(
     semantics expressed as a full-outer-join CASE in
     ``plans/queries_ext33.py``.
     """
-    state = _fold_state(path)
-    if state is None:
-        raise ValueError(f"tx_merge on a table with no commits: {path}")
-    read_version = state.version
-    snap = snapshot(path, read_version)
+    state, snap = _fold_for_write(path, "tx_merge")
     keys = list(on)
 
     from pyspark.sql.types import StructType
@@ -2913,16 +3025,10 @@ def tx_merge(
 
     # files that might hold a source key (narrow key-column probe); a
     # by_source clause inspects every live target row, so all files
-    current = _read_files(spark, path, snap.files, schema_json=state.schema)
     if has_by_source:
         affected = sorted(snap.files)
     else:
-        probed = {
-            r["f"]
-            for r in upsert_prune_probe(current, source, keys).collect()
-        }
-        affected = sorted({_probe_rel(path, p0) for p0 in probed})
-        assert set(affected) <= set(snap.files)
+        affected = _probe_files(spark, path, snap, source, keys)
 
     fcol, pcol = "__merge_f", "__merge_p"
     if affected:
@@ -3020,14 +3126,7 @@ def tx_merge(
     remove: list[str] = list(affected)
     stats: dict | None = None
     dv_commit: dict | None = None
-    # output sizing: rewrite bytes bounded by the affected files (store
-    # metadata) plus the source batch (Catalyst estimate)
-    _src_est = _plan_size_estimate(source)
-    rewrite_est = (
-        None
-        if not affected and _src_est is None
-        else _live_bytes(path, list(affected)) + (_src_est or 0)
-    )
+    rewrite_est = _rewrite_bytes(path, affected, source)
     acted = acted.persist()
     try:
         if merge_on_read:
@@ -3036,42 +3135,14 @@ def tx_merge(
             # kept rows never move — O(changed rows) bytes
             doomed = acted.where(
                 F.col("__action").isin("delete", "update", "update_by_source")
-            ).select(F.col(fcol).alias("file"), F.col(pcol).alias("pos"))
+            )
             out = acted.where(
                 F.col("__action").isin("insert", "update", "update_by_source")
             ).select(*[_out_col(c) for c in tcols])
             _check_constraints(out, state.properties, "the MERGE result")
-            existing = {
-                f: s for f, s in (snap.dvs or {}).items() if f in set(affected)
-            }
-            if existing:
-                doomed = doomed.unionByName(
-                    _dv_positions_df(spark, path, existing)
-                ).distinct()
-            doomed = doomed.persist()
-            try:
-                per_file = {
-                    r["file"]: r["n"]
-                    for r in doomed.groupBy("file")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                fully = [
-                    f
-                    for f in affected
-                    if per_file.get(f, 0) == _parquet_rows(path, f)
-                ]
-                dv_files = sorted(
-                    (set(per_file) | set(existing)) - set(fully)
-                )
-                if dv_files:
-                    sidecar = _stage_dv(
-                        doomed.where(F.col("file").isin(dv_files)), path
-                    )
-                    dv_commit = {f: sidecar for f in dv_files}
-            finally:
-                doomed.unpersist()
-            remove = fully
+            remove, dv_commit = _dv_or_drop(
+                spark, path, snap, doomed, affected, (fcol, pcol)
+            )
             if not out.isEmpty():
                 added = _stage_files(
                     _sized_for_write(out, rewrite_est), path,
@@ -3085,49 +3156,16 @@ def tx_merge(
                 )
             ).select(*[_out_col(c) for c in tcols])
             _check_constraints(out, state.properties, "the MERGE result")
-            staged = _stage_files(
-                _sized_for_write(out, rewrite_est), path, effective_schema
+            added, stats = _stage_rewrite(
+                out, path, effective_schema, rewrite_est
             )
-            stats = _footer_stats(path, staged)
-            for f in staged:  # an all-deleted rewrite stages nothing
-                if _parquet_rows(path, f) == 0:
-                    get_data_store(path).delete(os.path.join(path, f))
-                else:
-                    added.append(f)
-            stats = {f: s for f, s in stats.items() if f in added}
     finally:
         acted.unpersist()
 
-    if has_by_source:
-        conflict: dict | None = None  # reads the whole table: strict
-    else:
-        bounds = source.agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                agg
-                for k in keys
-                for agg in (
-                    F.min(k).alias(f"__lo_{k}"),
-                    F.max(k).alias(f"__hi_{k}"),
-                )
-            ],
-        ).collect()[0]
-        if bounds["__n"] == 0:
-            conflict = {"kind": "empty"}
-        else:
-            pm = _phys_map(state.schema)
-            ranges = {}
-            for k in keys:
-                lo = _norm_stat(bounds[f"__lo_{k}"])
-                hi = _norm_stat(bounds[f"__hi_{k}"])
-                ranges[pm.get(k, k)] = (
-                    None if lo is None or hi is None else [lo, hi]
-                )
-            conflict = (
-                {"kind": "keys", "ranges": ranges}
-                if any(v is not None for v in ranges.values())
-                else None
-            )
+    # a by_source merge reads the whole table: strict validation
+    conflict = (
+        None if has_by_source else _key_conflict(source, keys, state.schema)
+    )
     return _commit_and_maintain(
         spark,
         path,
@@ -3135,7 +3173,7 @@ def tx_merge(
         added,
         remove,
         effective_schema,
-        read_version,
+        state.version,
         stream_txn=stream_txn,
         stats=stats,
         conflict=conflict,
@@ -3205,7 +3243,7 @@ def tx_compact(
             "implements); for one column use order_col"
         )
     read_version = state.version
-    snap = snapshot(path, read_version)
+    snap = _state_snapshot(state)
     store = get_data_store(path)
     if max_dv_fraction is not None:
         # dead-row counts per holed file, one pyarrow pass per distinct
@@ -3455,11 +3493,7 @@ def tx_delete(
     every live row matches still drops whole.  Whole-file drops stay
     metadata-only in both modes; :func:`tx_compact` materializes DVs
     away."""
-    state = _fold_state(path)
-    if state is None:
-        raise ValueError(f"tx_delete on a table with no commits: {path}")
-    read_version = state.version
-    snap = snapshot(path, read_version)
+    state, snap = _fold_for_write(path, "tx_delete")
     if isinstance(where, str):
         # RAW SQL predicate (the SQL DML surface): arbitrary
         # expressions can't be proven against per-file stats, so no
@@ -3467,75 +3501,26 @@ def tx_delete(
         # whole table is the conflict domain) — the price of
         # generality; clause tuples keep the stats fast path
         pred = F.coalesce(F.expr(where), F.lit(False))
-        candidates = list(snap.files)
         whole: list[str] = []
-        straddle = list(candidates)
+        straddle = list(snap.files)
         phys_where: list[tuple] = []
     else:
         pred = F.coalesce(_where_expr(where), F.lit(False))
-        candidates, _pruned = prune_files(path, where, read_version)
-    fstats = snap.stats or {}
-    pm = _phys_map(state.schema)
-    if not isinstance(where, str):
-        phys_where = [
-            (_phys_clause_col(pm, c), op, v) for c, op, v in where
-        ]
-        whole = [
-            f
-            for f in candidates
-            if all(
-                _clause_all_match(fstats.get(f), c, op, v)
-                for c, op, v in phys_where
-            )
-        ]
-        straddle = [f for f in candidates if f not in set(whole)]
+        phys_where, whole, straddle = _split_whole(path, snap, where)
     added: list[str] = []
     stats: dict | None = None
     dv_commit: dict | None = None
     if straddle and merge_on_read:
-        # doomed = (file, pos) of matching rows; union with the
-        # straddlers' EXISTING DVs (the sidecar must stay cumulative).
-        # Reading raw (without applying DVs first) is equivalent: an
-        # already-dead matching row's position is already in the old
-        # sidecar, and the union dedups it.
+        # the matching rows, read raw (the existing DVs join in
+        # _dv_or_drop); a straddler whose every row is now dead drops
+        # WHOLE
         df = _read_files(
             spark, path, straddle, dvs=None,
             file_pos_cols=("__f", "__p"), schema_json=state.schema,
         )
-        doomed = df.where(pred).select(
-            F.col("__f").alias("file"), F.col("__p").alias("pos")
+        fully, dv_commit = _dv_or_drop(
+            spark, path, snap, df.where(pred), straddle
         )
-        existing = {
-            f: s for f, s in (snap.dvs or {}).items() if f in set(straddle)
-        }
-        if existing:
-            doomed = doomed.unionByName(
-                _dv_positions_df(spark, path, existing)
-            ).distinct()
-        doomed = doomed.persist()
-        try:
-            per_file = {
-                r["file"]: r["n"]
-                for r in doomed.groupBy("file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            # a straddler whose every row is now dead drops WHOLE
-            fully = [
-                f
-                for f in straddle
-                if per_file.get(f, 0) == _parquet_rows(path, f)
-            ]
-            dv_files = sorted(
-                (set(per_file) | set(existing)) - set(fully)
-            )
-            if dv_files:
-                sidecar = _stage_dv(
-                    doomed.where(F.col("file").isin(dv_files)), path
-                )
-                dv_commit = {f: sidecar for f in dv_files}
-        finally:
-            doomed.unpersist()
         whole = whole + fully
         straddle = []  # nothing rewritten: removals are DV-borne
     elif straddle:
@@ -3543,19 +3528,9 @@ def tx_delete(
             spark, path, straddle, snap.dvs, schema_json=state.schema
         )
         # keep rows where the predicate is FALSE or NULL
-        survivors = df.where(~pred)
-        staged = _stage_files(
-            _sized_for_write(survivors, _live_bytes(path, straddle)),
-            path,
-            state.schema,
+        added, stats = _stage_rewrite(
+            df.where(~pred), path, state.schema, _live_bytes(path, straddle)
         )
-        stats = _footer_stats(path, staged)
-        for f in staged:  # an all-deleted rewrite stages nothing
-            if _parquet_rows(path, f) == 0:
-                get_data_store(path).delete(os.path.join(path, f))
-            else:
-                added.append(f)
-        stats = {f: s for f, s in stats.items() if f in added}
     return _commit_and_maintain(
         spark,
         path,
@@ -3563,7 +3538,7 @@ def tx_delete(
         added,
         whole + straddle,
         state.schema,
-        read_version,
+        state.version,
         stream_txn=stream_txn,
         stats=stats,
         # conflict clauses in PHYSICAL names: commit stats are physical.
@@ -3593,39 +3568,21 @@ def tx_delete_keys(
     twin of the predicate :func:`tx_delete`, and the CDC-apply shape a
     change-feed consumer needs (a batch of deleted keys, not a range).
 
-    Same scale contract as :func:`tx_upsert`: the narrow key-column
-    probe (:func:`upsert_prune_probe`) finds the files that MIGHT hold
-    a doomed key, only those rewrite (anti-join against the broadcast
-    key set), everything else carries over by reference, and the
-    key-set bounding box travels as the conflict domain so concurrent
-    key-disjoint appends commute.
+    Scale contract: the narrow key-column probe (:func:`_probe_files`)
+    finds the files that MIGHT hold a doomed key, only those rewrite
+    (anti-join against the broadcast key set), everything else carries
+    over by reference, and the key-set bounding box
+    (:func:`_key_conflict`) travels as the conflict domain so
+    concurrent key-disjoint appends commute.
 
     ``merge_on_read=True``: the doomed rows' positions land in a
     deletion-vector sidecar instead of rewriting the probed files —
     O(deleted keys) bytes per commit, the right CDC-apply cost for a
     follower trailing a big table; a file left with no live row drops
-    whole."""
-    state = _fold_state(path)
-    if state is None:
-        raise ValueError(f"tx_delete_keys on a table with no commits: {path}")
-    read_version = state.version
-    snap = snapshot(path, read_version)
+    whole (:func:`_dv_or_drop`)."""
+    state, snap = _fold_for_write(path, "tx_delete_keys")
     keys_df = keys_df.select(*key_cols).distinct()
-
-    # probe over a DV-free schema-projected read (input_file_name is
-    # only defined at the scan and survives the projection; DV'd-out
-    # rows over-approximate, never under)
-    current = _read_files(
-        spark, path, snap.files, schema_json=state.schema
-    )
-    affected_paths = {
-        r["f"]
-        for r in upsert_prune_probe(current, keys_df, key_cols).collect()
-    }
-    # snapshot name space: own files relative, clone-external refs
-    # absolute (_probe_rel)
-    affected = sorted({_probe_rel(path, p) for p in affected_paths})
-    assert set(affected) <= set(snap.files)
+    affected = _probe_files(spark, path, snap, keys_df, key_cols)
     added: list[str] = []
     remove: list[str] = list(affected)
     stats: dict | None = None
@@ -3635,40 +3592,9 @@ def tx_delete_keys(
             spark, path, affected, snap.dvs,
             file_pos_cols=("__f", "__p"), schema_json=state.schema,
         )
-        doomed = base.join(
-            F.broadcast(keys_df), list(key_cols), "left_semi"
-        ).select(F.col("__f").alias("file"), F.col("__p").alias("pos"))
-        existing = {
-            f: s for f, s in (snap.dvs or {}).items() if f in set(affected)
-        }
-        if existing:
-            doomed = doomed.unionByName(
-                _dv_positions_df(spark, path, existing)
-            ).distinct()
-        doomed = doomed.persist()
-        try:
-            per_file = {
-                r["file"]: r["n"]
-                for r in doomed.groupBy("file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            fully = [
-                f
-                for f in affected
-                if per_file.get(f, 0) == _parquet_rows(path, f)
-            ]
-            dv_files = sorted(
-                (set(per_file) | set(existing)) - set(fully)
-            )
-            if dv_files:
-                sidecar = _stage_dv(
-                    doomed.where(F.col("file").isin(dv_files)), path
-                )
-                dv_commit = {f: sidecar for f in dv_files}
-        finally:
-            doomed.unpersist()
-        remove = fully  # only fully-dead files leave the snapshot
+        doomed = base.join(F.broadcast(keys_df), list(key_cols), "left_semi")
+        # only fully-dead files leave the snapshot
+        remove, dv_commit = _dv_or_drop(spark, path, snap, doomed, affected)
     elif affected:
         base = _read_files(
             spark, path, affected, snap.dvs, schema_json=state.schema
@@ -3677,41 +3603,8 @@ def tx_delete_keys(
             base.join(F.broadcast(keys_df), list(key_cols), "left_anti"),
             state.schema,
         )
-        staged = _stage_files(
-            _sized_for_write(kept, _live_bytes(path, affected)),
-            path,
-            state.schema,
-        )
-        stats = _footer_stats(path, staged)
-        for f in staged:  # an all-deleted rewrite stages nothing
-            if _parquet_rows(path, f) == 0:
-                get_data_store(path).delete(os.path.join(path, f))
-            else:
-                added.append(f)
-        stats = {f: s for f, s in stats.items() if f in added}
-    bounds = keys_df.agg(
-        F.count(F.lit(1)).alias("__n"),
-        *[
-            agg
-            for k in key_cols
-            for agg in (F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}"))
-        ],
-    ).collect()[0]
-    if bounds["__n"] == 0:
-        conflict: dict | None = {"kind": "empty"}
-    else:
-        pm = _phys_map(state.schema)
-        ranges = {}
-        for k in key_cols:
-            lo = _norm_stat(bounds[f"__lo_{k}"])
-            hi = _norm_stat(bounds[f"__hi_{k}"])
-            ranges[pm.get(k, k)] = (
-                None if lo is None or hi is None else [lo, hi]
-            )
-        conflict = (
-            {"kind": "keys", "ranges": ranges}
-            if any(v is not None for v in ranges.values())
-            else None
+        added, stats = _stage_rewrite(
+            kept, path, state.schema, _live_bytes(path, affected)
         )
     return _commit_and_maintain(
         spark,
@@ -3720,10 +3613,10 @@ def tx_delete_keys(
         added,
         remove,
         state.schema,
-        read_version,
+        state.version,
         stream_txn=stream_txn,
         stats=stats,
-        conflict=conflict,
+        conflict=_key_conflict(keys_df, key_cols, state.schema),
         dv=dv_commit,
     )
 
@@ -3745,15 +3638,15 @@ def tx_update(
     value)`` conjunction — rows where it is FALSE or NULL are
     untouched.
 
-    Scale contract mirrors :func:`tx_delete`: files whose logged stats
-    prove NO row matches carry over by reference (never opened); only
+    Scale contract: files whose logged stats prove NO row matches
+    (:func:`prune_files`) carry over by reference (never opened); only
     may-match files are read.  Copy-on-write rewrites those files with
     the assignments applied under ``CASE WHEN <pred>``;
     ``merge_on_read=True`` instead deletion-vectors the matched rows
     (O(matched) sidecar bytes) and appends their updated copies as one
     new sized file — a k-row update on 1 GB files commits O(k) bytes.
     A may-match file whose every live row matched drops whole under
-    MOR (its content moved to the new file).
+    MOR (its content moved to the new file; :func:`_dv_or_drop`).
 
     Assignment values are cast to the column's existing type (an
     UPDATE never changes the schema — that is :func:`tx_evolve_types`);
@@ -3767,13 +3660,9 @@ def tx_update(
     if not set or not isinstance(set, dict):
         raise ValueError("tx_update: set must be a non-empty {col: sql_expr} dict")
     # the SQL-shaped kwarg name shadows the builtin ``set`` for this
-    # whole function body — use ``frozenset`` below
+    # whole function body — never call ``set()`` below
     assignments = dict(set)
-    state = _fold_state(path)
-    if state is None:
-        raise ValueError(f"tx_update on a table with no commits: {path}")
-    read_version = state.version
-    snap = snapshot(path, read_version)
+    state, snap = _fold_for_write(path, "tx_update")
 
     from pyspark.sql.types import StructType
 
@@ -3786,7 +3675,6 @@ def tx_update(
             f"(schema has {sorted(types)}); an UPDATE never adds "
             "columns — evolve the schema first"
         )
-    pm = _phys_map(state.schema)
     if isinstance(where, str):
         # RAW SQL predicate (the SQL DML surface): no stats pruning,
         # strict validation — same trade as :func:`tx_delete`
@@ -3794,11 +3682,9 @@ def tx_update(
         candidates = list(snap.files)
         pred = F.coalesce(F.expr(where), F.lit(False))
     else:
-        phys_where = [
-            (_phys_clause_col(pm, c), op, v) for c, op, v in (where or ())
-        ]
+        phys_where = _phys_where(state.schema, where or ())
         if where:
-            candidates, _pruned = prune_files(path, where, read_version)
+            candidates, _pruned = prune_files(path, where, state.version)
         else:
             candidates = list(snap.files)
         pred = (
@@ -3833,13 +3719,9 @@ def tx_update(
         )
         matched = df.where(pred).persist()
         try:
-            per_file = {
-                r["file"]: r["n"]
-                for r in matched.groupBy(F.col("__f").alias("file"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            touched = sorted(per_file)
+            touched = sorted(
+                r["__f"] for r in matched.select("__f").distinct().collect()
+            )
             if touched:
                 updated = _assigned(
                     matched.drop("__f", "__p"), F.lit(True)
@@ -3854,46 +3736,11 @@ def tx_update(
                 )
                 added.extend(staged)
                 stats = _footer_stats(path, staged)
-                # fully-matched files drop whole (all their live rows
-                # moved to the new file); live rows = physical rows
-                # minus existing DV holes
-                existing = {
-                    f: s
-                    for f, s in (snap.dvs or {}).items()
-                    if f in frozenset(touched)
-                }
-                holes: dict[str, int] = {}
-                if existing:
-                    holes = {
-                        r["file"]: r["n"]
-                        for r in _dv_positions_df(spark, path, existing)
-                        .groupBy("file")
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect()
-                    }
-                fully = [
-                    f
-                    for f in touched
-                    if per_file[f]
-                    == _parquet_rows(path, f) - holes.get(f, 0)
-                ]
-                dv_files = sorted(frozenset(touched) - frozenset(fully))
-                if dv_files:
-                    doomed = matched.where(
-                        F.col("__f").isin(dv_files)
-                    ).select(
-                        F.col("__f").alias("file"), F.col("__p").alias("pos")
-                    )
-                    still = {
-                        f: s for f, s in existing.items() if f in frozenset(dv_files)
-                    }
-                    if still:
-                        doomed = doomed.unionByName(
-                            _dv_positions_df(spark, path, still)
-                        ).distinct()
-                    sidecar = _stage_dv(doomed, path)
-                    dv_commit = {f: sidecar for f in dv_files}
-                remove = fully
+                # a file whose every live row matched drops whole (all
+                # its live rows moved to the new file)
+                remove, dv_commit = _dv_or_drop(
+                    spark, path, snap, matched, touched
+                )
         finally:
             matched.unpersist()
     elif candidates:
@@ -3917,7 +3764,7 @@ def tx_update(
         added,
         remove,
         state.schema,
-        read_version,
+        state.version,
         stream_txn=stream_txn,
         stats=stats,
         conflict=(
@@ -3947,7 +3794,7 @@ def tx_replace_where(
     one bounded probe) — otherwise a replay would leak rows outside the
     region it replaces and idempotence breaks.
 
-    File accounting mirrors :func:`tx_delete`: provably-all-matching
+    File accounting is :func:`_split_whole`'s: provably-all-matching
     files drop whole (never opened), straddlers are rewritten without
     their matching rows, non-matching files carry over by reference.
     Concurrency: a concurrent append commutes — the composed state
@@ -3976,7 +3823,7 @@ def tx_replace_where(
     )
     out = _align(df, union_schema)
     _check_constraints(out, state.properties, "the REPLACE batch")
-    snap = snapshot(path, read_version)
+    snap = _state_snapshot(state)
     _df_est = _plan_size_estimate(df)
     rewrite_est = _df_est  # straddler carry-over bytes added below
     if where:
@@ -3989,19 +3836,7 @@ def tx_replace_where(
                 f"replaced region {list(where)!r}; a replay would leak "
                 "them — widen the predicate or filter the batch"
             )
-        candidates, _pruned = prune_files(path, where, read_version)
-        fstats = snap.stats or {}
-        pm = _phys_map(state.schema)
-        phys_where = [(_phys_clause_col(pm, c), op, v) for c, op, v in where]
-        whole = [
-            f
-            for f in candidates
-            if all(
-                _clause_all_match(fstats.get(f), c, op, v)
-                for c, op, v in phys_where
-            )
-        ]
-        straddle = [f for f in candidates if f not in set(whole)]
+        phys_where, whole, straddle = _split_whole(path, snap, where)
         remove = whole + straddle
         if straddle:
             sdf = _read_files(
@@ -4070,6 +3905,34 @@ def last_committed_batch(path: str, app_id: str) -> int | None:
     return state.stream_txns.get(app_id)
 
 
+def _exactly_once_sink(
+    changes: DataFrame,
+    path: str,
+    checkpoint_dir: str,
+    app_id: str,
+    available_now: bool,
+    apply,
+):
+    """Start the ``foreachBatch`` sink both streaming MERGE writers
+    share: each micro-batch commits through ``apply(batch_df,
+    (app_id, batch_id))``, which records the token in its commit, and
+    a batch at or below :func:`last_committed_batch` (a replay after a
+    restart) is skipped — one commit per batch, exactly once."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        floor = last_committed_batch(path, app_id)
+        if floor is not None and batch_id <= floor:
+            return  # replayed batch: already committed exactly-once
+        apply(batch_df, (app_id, batch_id))
+
+    writer = changes.writeStream.foreachBatch(_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def tx_upsert_stream(
     changes: DataFrame,
     path: str,
@@ -4092,27 +3955,13 @@ def tx_upsert_stream(
     a MERGE against nothing is a create, and creates should be
     explicit."""
     spark = changes.sparkSession
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        floor = last_committed_batch(path, app_id)
-        if floor is not None and batch_id <= floor:
-            return  # replayed batch: already committed exactly-once
-        tx_upsert(
-            spark,
-            path,
-            batch_df,
-            keys,
-            order_by,
-            stream_txn=(app_id, batch_id),
-            merge_on_read=merge_on_read,
-        )
-
-    writer = changes.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint_dir
+    return _exactly_once_sink(
+        changes, path, checkpoint_dir, app_id, available_now,
+        lambda batch_df, txn: tx_upsert(
+            spark, path, batch_df, keys, order_by,
+            stream_txn=txn, merge_on_read=merge_on_read,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def tx_merge_stream(
@@ -4140,27 +3989,13 @@ def tx_merge_stream(
     contract — pre-aggregate upstream, e.g. newest per key with
     ``upsert_snapshot``); the table must exist."""
     spark = changes.sparkSession
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        floor = last_committed_batch(path, app_id)
-        if floor is not None and batch_id <= floor:
-            return  # replayed batch: already committed exactly-once
-        tx_merge(
-            spark,
-            path,
-            batch_df,
-            on=on,
-            merge_on_read=merge_on_read,
-            stream_txn=(app_id, batch_id),
-            **merge_clauses,
-        )
-
-    writer = changes.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return _exactly_once_sink(
+        changes, path, checkpoint_dir, app_id, available_now,
+        lambda batch_df, txn: tx_merge(
+            spark, path, batch_df, on=on, merge_on_read=merge_on_read,
+            stream_txn=txn, **merge_clauses,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def tx_change_feed(
@@ -4454,13 +4289,10 @@ def tx_evolve_types(
     (they'd otherwise publish files in the OLD types into a NEW-typed
     table).  This is the one whole-table-rewrite operation in the
     stack; everything else is incremental by design."""
-    state = _fold_state(path)
-    if state is None:
-        raise ValueError(f"tx_evolve_types on a table with no commits: {path}")
+    state, snap = _fold_for_write(path, "tx_evolve_types")
     from pyspark.sql.types import StructField, StructType
 
     read_version = state.version
-    snap = snapshot(path, read_version)
     df = read_table(spark, path, read_version)
     for col, new_type in casts.items():
         if col not in df.columns:

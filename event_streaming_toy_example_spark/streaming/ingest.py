@@ -40,8 +40,13 @@ from event_streaming_toy_example_spark.operators.enrich import (
     split_event_name,
     with_created_datetime,
 )
-from event_streaming_toy_example_spark.sources.kinesis import decode_kinesis_data
-from event_streaming_toy_example_spark.sources.ndjson import PARTITION_COLS_HOUR
+from event_streaming_toy_example_spark.sources.kinesis import (
+    decode_kinesis_records,
+)
+from event_streaming_toy_example_spark.sources.ndjson import (
+    PARTITION_COLS_HOUR,
+    with_time_partitions,
+)
 
 
 #: The ingest-source contract: ONE string column named ``record``
@@ -85,17 +90,6 @@ def kafka_event_source(
     return from_kafka_records(raw)
 
 
-def decode_stream(records: DataFrame, column: str = "record") -> DataFrame:
-    """Kinesis-record JSON strings -> flattened event columns."""
-    ev = decode_kinesis_data(F.col(column))
-    return records.select(
-        ev["created_at"].alias("created_at"),
-        ev["event_name"].alias("event_name"),
-        ev["event_specifics"].alias("event_specifics"),
-        ev["event_uuid"].alias("event_uuid"),
-    )
-
-
 def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """D1: stateful streaming dedup on ``event_uuid`` within a
     watermark. ``created_ts`` (event time) is added for the watermark
@@ -109,15 +103,9 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 
 def enrich_stream(events: DataFrame) -> DataFrame:
-    """P1/P2 + event-time partition columns for the staging layout."""
-    out = with_created_datetime(split_event_name(events))
-    ts = F.col("created_ts")
-    return (
-        out.withColumn("year", F.year(ts))
-        .withColumn("month", F.month(ts))
-        .withColumn("day", F.dayofmonth(ts))
-        .withColumn("hour", F.hour(ts))
-    )
+    """P1/P2 + event-time partition columns for the staging layout —
+    the batch expressions, derived from ``created_at``."""
+    return with_time_partitions(with_created_datetime(split_event_name(events)))
 
 
 def start_ingest_stream(
@@ -134,9 +122,9 @@ def start_ingest_stream(
     cadence (``run_toy_example.py:24-26``); ``available_now=True`` runs
     it as a self-terminating backfill (the "glue-style" catch-up).
     """
-    staged = enrich_stream(dedup_stream(decode_stream(records), watermark)).drop(
-        "created_ts"
-    )
+    staged = enrich_stream(
+        dedup_stream(decode_kinesis_records(records), watermark)
+    ).drop("created_ts")
     writer = (
         staged.writeStream.format("json")
         .option("path", staging_path)
@@ -193,11 +181,7 @@ def start_ingest_stream_with_dlq(
             dead.write.mode("overwrite").text(
                 f"{dlq_path}/ingest_batch={batch_id}"
             )
-            staged = enrich_stream(
-                dedup_exact(valid, ["event_uuid"]).withColumn(
-                    "created_ts", F.timestamp_seconds(F.col("created_at"))
-                )
-            ).drop("created_ts")
+            staged = enrich_stream(dedup_exact(valid, ["event_uuid"]))
             staged.write.mode("overwrite").partitionBy(*PARTITION_COLS_HOUR).json(
                 f"{staging_path}/ingest_batch={batch_id}"
             )

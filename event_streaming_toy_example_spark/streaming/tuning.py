@@ -40,8 +40,8 @@ same 32 and 8 widths) showed the limit of narrowing:
 ``stream_cep_pattern`` ran 15.0 s at 32 and 24.1 s at 8, a regression.
 That is the design constraint: entries whose micro-batch work is
 Python-compute-bound (``applyInPandasWithState`` over many/large
-groups) need the full batch width for worker parallelism — for those,
-pass ``python_heavy=True`` and the width is left alone.
+groups) need the full batch width for worker parallelism, so they do
+not enter :func:`stream_tuning` at all.
 
 Sizing is scale-adaptive, never a local constant: the default is
 ``max(4, defaultParallelism // 4)`` — it grows with the cluster (250
@@ -49,8 +49,7 @@ state partitions at 1000 cores), but stays a fraction of the batch
 width because stateful stages are commit-bound, not CPU-bound.  A
 deployment whose state genuinely needs more width (state must fit the
 executor heap per partition) sets ``spark_graft.stream.statePartitions``
-on the session or ``SPARK_GRAFT_STREAM_STATE_PARTITIONS`` in the
-environment; both override the heuristic.
+on the session, which overrides the heuristic.
 
 Concurrency note (ADVICE r12): ``stream_tuning`` mutates the
 session-global ``spark.sql.shuffle.partitions`` for the whole
@@ -61,20 +60,18 @@ are insulated in practice (AQE coalesces/grows batch shuffles at
 runtime), but the scope is process-global state: callers driving
 several streaming queries concurrently from one session must either
 serialize the tuned regions or set the width once session-wide via the
-conf/env override instead of this context manager.  Nested/overlapping
+conf override instead of this context manager.  Nested/overlapping
 regions are not thread-safe (the restore writes back whatever value the
 region saw at entry).
 """
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 _PARTS_CONF = "spark_graft.stream.statePartitions"
-_PARTS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 
@@ -97,19 +94,16 @@ def _parse_width(raw: str, source: str) -> int:
 
 def stream_state_partitions(spark: SparkSession) -> int:
     """Resolve the streaming state-partition width for this session:
-    explicit conf > env override > ``max(4, defaultParallelism // 4)``.
-    An empty conf/env value is treated as unset (falls through)."""
+    explicit conf > ``max(4, defaultParallelism // 4)``.  An empty
+    conf value is treated as unset (falls through)."""
     conf = spark.conf.get(_PARTS_CONF, None)
     if conf:
         return _parse_width(conf, f"session conf {_PARTS_CONF}")
-    env = os.environ.get(_PARTS_ENV)
-    if env:
-        return _parse_width(env, f"environment variable {_PARTS_ENV}")
     return max(4, spark.sparkContext.defaultParallelism // 4)
 
 
 @contextmanager
-def stream_tuning(spark: SparkSession, python_heavy: bool = False):
+def stream_tuning(spark: SparkSession):
     """Scope ``spark.sql.shuffle.partitions`` to the streaming width
     for the duration of a start→awaitTermination region.
 
@@ -117,12 +111,7 @@ def stream_tuning(spark: SparkSession, python_heavy: bool = False):
     read from the session conf when the first micro-batch's offsets are
     constructed, so the override must stay in place until the query
     terminates — wrap the WHOLE start+await region, not just
-    ``.start()``.  ``python_heavy=True`` keeps the session width (see
-    module docstring) while still scoping a no-op region so call sites
-    stay uniform."""
-    if python_heavy:
-        yield
-        return
+    ``.start()``."""
     prev = spark.conf.get(_SHUFFLE_KEY)
     spark.conf.set(_SHUFFLE_KEY, str(stream_state_partitions(spark)))
     try:

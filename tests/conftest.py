@@ -37,7 +37,10 @@ _FAST_OVERRIDES: dict[str, str] = {}
 
 #: Extra tests included in the fast subset beyond the one-per-module
 #: default, as (module_basename, test_name_prefix).
-_FAST_EXTRAS: set[tuple[str, str]] = set()
+_FAST_EXTRAS: set[tuple[str, str]] = {
+    # the merge-on-read DV-or-drop step every row-level DML op shares
+    ("test_txtable_dv.py", "test_mor_delete_fully_dead_file_drops_whole"),
+}
 
 
 def _stale_fast_names(items, overrides=None, extras=None) -> list[str]:

@@ -5,13 +5,12 @@ smaller, scale-derived width for the start→await region of stateful
 streaming queries (state-store commit cost is per partition per batch;
 see the module docstring's measurements).  These tests pin:
 
-- the resolver's precedence (conf > env > parallelism-derived default);
+- the resolver's precedence (conf > parallelism-derived default);
 - that the context manager restores the session width on exit AND on
   error;
 - that a stream started under the manager actually plans its stateful
   operator with the tuned width (the knob must land in the checkpoint,
-  not just the conf);
-- that ``python_heavy=True`` leaves the width alone.
+  not just the conf).
 """
 
 from __future__ import annotations
@@ -29,14 +28,9 @@ from event_streaming_toy_example_spark.streaming.tuning import (
 )
 
 
-def test_resolver_precedence(spark, monkeypatch):
-    # the default assertion must not see a pre-exported override
-    # (ADVICE r12: the test failed in environments that export it)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+def test_resolver_precedence(spark):
     default = max(4, spark.sparkContext.defaultParallelism // 4)
     assert stream_state_partitions(spark) == default
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "6")
-    assert stream_state_partitions(spark) == 6
     spark.conf.set("spark_graft.stream.statePartitions", "3")
     try:
         assert stream_state_partitions(spark) == 3
@@ -44,17 +38,10 @@ def test_resolver_precedence(spark, monkeypatch):
         spark.conf.unset("spark_graft.stream.statePartitions")
 
 
-def test_resolver_rejects_malformed_override(spark, monkeypatch):
+def test_resolver_rejects_malformed_override(spark):
     """A malformed override names its source (ADVICE r12) instead of
     raising a bare ValueError from int() mid-query; a width below 1 is
     rejected the same way, never clamped."""
-    for raw in ("eight", "0", "-8"):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raw)
-        with pytest.raises(
-            ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTITIONS"
-        ):
-            stream_state_partitions(spark)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     try:
         for raw in ("many", "0", "-8"):
             spark.conf.set("spark_graft.stream.statePartitions", raw)
@@ -76,13 +63,6 @@ def test_context_sets_and_restores(spark):
     with pytest.raises(RuntimeError):
         with stream_tuning(spark):
             raise RuntimeError("boom")
-    assert spark.conf.get(_SHUFFLE_KEY) == prev
-
-
-def test_python_heavy_is_noop(spark):
-    prev = spark.conf.get(_SHUFFLE_KEY)
-    with stream_tuning(spark, python_heavy=True):
-        assert spark.conf.get(_SHUFFLE_KEY) == prev
     assert spark.conf.get(_SHUFFLE_KEY) == prev
 
 

@@ -74,18 +74,68 @@ def test_mor_delete_is_cumulative_on_the_same_file(spark, tmp_path):
     assert len(_content(spark, p, version=2)) == 45
 
 
-def test_mor_delete_fully_dead_file_drops_whole(spark, tmp_path):
+#: each row-level DML op, killing the LIVE rows k=6..9 left in the
+#: file that an earlier MOR delete already holed (k<6), plus what the
+#: op leaves of k<10 elsewhere (updated / superseded copies)
+_KILL_REST = {
+    "tx_delete": (
+        lambda spark, p: tx.tx_delete(
+            spark, p, [("k", "<", 10)], merge_on_read=True
+        ),
+        [],
+    ),
+    "tx_delete_keys": (
+        lambda spark, p: tx.tx_delete_keys(
+            spark, p, _df(spark, [(i, 0, "") for i in range(6, 10)]), ["k"],
+            merge_on_read=True,
+        ),
+        [],
+    ),
+    "tx_update": (
+        lambda spark, p: tx.tx_update(
+            spark, p, {"v": "'u'"}, [("k", "<", 10)], merge_on_read=True
+        ),
+        [(i, 1, "u") for i in range(6, 10)],
+    ),
+    "tx_merge": (
+        lambda spark, p: tx.tx_merge(
+            spark, p, _df(spark, [(i, 2, "m") for i in range(6, 10)]), ["k"],
+            when_matched_delete=True, merge_on_read=True,
+        ),
+        [],
+    ),
+    "tx_upsert": (
+        lambda spark, p: tx.tx_upsert(
+            spark, p, _df(spark, [(i, 2, f"n{i}") for i in range(6, 10)]),
+            ["k"], ["ts"], merge_on_read=True,
+        ),
+        [(i, 2, f"n{i}") for i in range(6, 10)],
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(_KILL_REST))
+def test_mor_delete_fully_dead_file_drops_whole(spark, tmp_path, op):
+    """The shared merge-on-read step: a file whose every row is dead
+    after the op (its earlier DV unioned with the op's own doomed
+    rows) must DROP, not carry a DV over all of its rows — for every
+    row-level DML op."""
+    kill_rest, left = _KILL_REST[op]
     p = str(tmp_path / "t")
     tx.tx_append(_df(spark, _rows(10)).coalesce(1), p)
+    (dead,) = tx.snapshot(p).files
     tx.tx_append(_df(spark, [(i, 1, f"x{i}") for i in range(100, 110)]).coalesce(1), p)
-    # kill file 1's remaining rows in two MOR waves; the second wave
-    # leaves no live row, so the file must DROP, not carry a full DV
+    # first MOR wave: file 1 keeps 4 live rows behind a DV
     tx.tx_delete(spark, p, [("k", "<", 6)], merge_on_read=True)
-    tx.tx_delete(spark, p, [("k", "<", 10)], merge_on_read=True)
+    assert dead in tx.snapshot(p).dvs
+    # second wave: the op leaves file 1 no live row
+    kill_rest(spark, p)
     snap = tx.snapshot(p)
-    assert len(snap.files) == 1  # file 1 gone
+    assert dead not in snap.files  # file 1 gone
     assert not (snap.dvs or {})  # and no dangling DV entry
-    assert [r[0] for r in _content(spark, p)] == list(range(100, 110))
+    assert _content(spark, p) == sorted(
+        left + [(i, 1, f"x{i}") for i in range(100, 110)]
+    )
 
 
 def test_mor_upsert_matches_cow_and_keeps_untouched_rows_in_place(

@@ -16,12 +16,16 @@ Usage::
 Compare semantics are IDENTICAL to the pytest oracle gate (and the
 driver): columns sorted by name, rows sorted by full value tuple,
 floats compared exactly after float() coercion, NaN==NaN.  Entries
-without an oracle get a rows-only record, marked as such.
+without an oracle get a rows-only record, marked as such.  Every
+record also carries ``digest``, the md5 of the engine's normalized
+result, so two replays (say, before and after a refactor) can be
+compared entry by entry without an oracle.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import math
 import multiprocessing
@@ -96,6 +100,9 @@ def _run_shard(args: tuple) -> dict:
             sdf = ALL_QUERIES[name](spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            rec["digest"] = hashlib.md5(
+                repr(_normalize(srows, scols)).encode()
+            ).hexdigest()
             if name in ALL_ORACLES:
                 cur = duck.execute(ALL_ORACLES[name])
                 ocols = [d[0] for d in cur.description]
