@@ -385,6 +385,13 @@ def _ingest_throughput(spark, n: int = 100_000) -> dict:
     }
 
 
+def _failure_note(exc: BaseException) -> str:
+    """``"<Type>: <message>"`` for an artifact: the message's first
+    line only, capped, since Spark errors carry whole plans."""
+    lines = str(exc).strip().splitlines()
+    return f"{type(exc).__name__}: {lines[0][:300] if lines else ''}"
+
+
 def main(medians: bool = False) -> None:
     # Resolve against the FULL catalog (PRIMARY ∪ EXTENDED) so the
     # round-1 headline set stays diffable even though the driver-facing
@@ -396,12 +403,16 @@ def main(medians: bool = False) -> None:
     # codegen warm-up: compile every headline plan shape on tiny data
     # so timed runs measure execution, not one-time JIT compilation
     warm_sf = "/root/testdata/sf0.001"
+    # set-up failures are not fatal (the timed run still measures the
+    # entry) but are recorded, so a broken warm-up or staging build is
+    # visible in the artifact instead of hidden inside a timed run
+    warmup_failures: dict[str, str] = {}
     if os.path.isdir(warm_sf):
         for name in HEADLINE:
             try:
                 qs[name](spark, warm_sf).count()
-            except Exception:
-                pass
+            except Exception as exc:
+                warmup_failures[name] = _failure_note(exc)
         spark.catalog.clearCache()
     from event_streaming_toy_example_spark.caching import release_caches
 
@@ -428,11 +439,12 @@ def main(medians: bool = False) -> None:
     # staging rebuild landed inside the timed window, docs/PLANS.md).
     # One untimed run each makes the timed loop measure the operator,
     # not the one-time artifact build.
+    prestage_failures: dict[str, str] = {}
     for name in PRESTAGE:
         try:
             qs[name](spark, SF_DIR).count()
-        except Exception:
-            pass
+        except Exception as exc:
+            prestage_failures[name] = _failure_note(exc)
     spark.catalog.clearCache()
 
     n_runs = 3 if medians else 1
@@ -480,6 +492,8 @@ def main(medians: bool = False) -> None:
             "calibration": cal,
             "sf": sf_val,
             "ingest": ingest,
+            "warmup_failures": warmup_failures,
+            "prestage_failures": prestage_failures,
         }
         out = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_MEDIANS.json"
@@ -506,6 +520,8 @@ def main(medians: bool = False) -> None:
         "calibration": cal,
         "sf": sf_val,
         "ingest": ingest,
+        "warmup_failures": warmup_failures,
+        "prestage_failures": prestage_failures,
     }
     print(json.dumps(artifact))
     # VERDICT r12 item 2 asked for the per-query dict inside the FINAL
@@ -541,6 +557,9 @@ def main(medians: bool = False) -> None:
                 "calibration": cal,
                 "sf": sf_val,
                 "ingest": ingest,
+                # count only: the notes are in the full artifact
+                "setup_failures": len(warmup_failures)
+                + len(prestage_failures),
                 # where the full per-query dict lives (see the capture-
                 # window note above): the preceding stdout line and this
                 # always-written file

@@ -758,7 +758,7 @@ def read_table(
         return None
     files = list(snap.files)
     if where:
-        files, _ = prune_files(path, where, snap.version)
+        files, _ = prune_files(path, where, snap=snap)
     if not files:
         # empty snapshot (everything deleted or pruned): typed empty
         # relation
@@ -1939,12 +1939,17 @@ def prune_files(
     path: str,
     where: Sequence[tuple],
     version: int | None = None,
+    *,
+    snap: Snapshot | None = None,
 ) -> tuple[list[str], list[str]]:
     """Split a snapshot's live files into (scan, skip) under a
     conjunction of ``(col, op, value)`` clauses (ops ``= < <= > >=
     in``).  A file is skipped only when its recorded stats PROVE no
-    row can satisfy some clause."""
-    snap = snapshot(path, version)
+    row can satisfy some clause.  A caller that already holds the
+    snapshot passes it as ``snap`` (``version`` is then ignored), so
+    the log is not folded a second time."""
+    if snap is None:
+        snap = snapshot(path, version)
     if snap is None:
         return [], []
     phys_where = _phys_where(snap.schema, where)
@@ -2749,7 +2754,7 @@ def _split_whole(
     prove EVERY row matches (``whole``) can be dropped without being
     opened; the may-match rest (``straddle``) must be read.  Files the
     stats prove disjoint are in neither list."""
-    candidates, _pruned = prune_files(path, where, snap.version)
+    candidates, _pruned = prune_files(path, where, snap=snap)
     fstats = snap.stats or {}
     phys_where = _phys_where(snap.schema, where)
     whole = [
@@ -3684,7 +3689,7 @@ def tx_update(
     else:
         phys_where = _phys_where(state.schema, where or ())
         if where:
-            candidates, _pruned = prune_files(path, where, state.version)
+            candidates, _pruned = prune_files(path, where, snap=snap)
         else:
             candidates = list(snap.files)
         pred = (

@@ -14,8 +14,9 @@ express.  The reference (a record-at-a-time event pipeline,
 - ``dedup_jaccard_prefix`` — prefix-filtered (PPJoin) exact
   similarity self-join, pinned to its high-threshold regime.
 - ``cep_pattern_match`` / ``stream_cep_pattern`` — batch and
-  streaming MATCH_RECOGNIZE-shape pattern detection; the streaming
-  twin shares the batch oracle byte-identically.
+  streaming MATCH_RECOGNIZE-shape pattern detection: one aggregate
+  (``cep_sequences``) that the stream runs as a streaming
+  aggregation, so the twins share the batch oracle byte-identically.
 - ``scd2_point_lookup`` — point-in-time lookup against the SCD2
   history (the versioned-dimension consuming pattern).
 - ``search_tfidf_topk`` — integer tf-idf keyword retrieval with a
@@ -361,27 +362,58 @@ WHERE {jac} >= {_PFX_THRESHOLD}
 # --------------------------------------- event-sequence pattern match
 
 
-def q_cep_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Complex-event-processing pattern detection: per (user, day),
-    order the events, render the type-initial sequence (the five
-    event types have distinct initials), and count non-overlapping
-    ``view (click|error)* purchase`` matches with a regex — the
-    MATCH_RECOGNIZE shape expressed as sort-within-group + pattern
-    scan.  The md5 of the full sequence is part of the output, so the
-    per-group ORDERING itself is value-hash-checked, not just the
-    match counts.  One shuffle (the group key); the regex scan is
-    row-local codegen.  At 100 TB the group is bounded by a user-day;
-    unbounded keys would move this to the stateful-streaming surface
-    (``stream_session_stateful``)."""
-    ev = load_table(spark, sf_dir, "events")
-    grouped = ev.groupBy(
-        "user_id", F.date_format("ts", "yyyy-MM-dd").alias("day")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
+#: how far a (user, day) key's rows, its sentinel included, may trail
+#: the newest event time of the stream before the day's state is
+#: evicted and later rows for it are dropped as late
+_CEP_LATENESS = "1 day"
+
+
+def cep_sequences(ev: DataFrame) -> DataFrame:
+    """Per (user, day): order the events, render the type-initial
+    sequence (the five event types have distinct initials), and count
+    non-overlapping ``view (click|error)* purchase`` matches with a
+    regex — the MATCH_RECOGNIZE shape expressed as sort-within-group +
+    pattern scan.  The md5 of the full sequence is part of the output,
+    so the per-group ORDERING itself is value-hash-checked, not just
+    the match counts.
+
+    The one implementation of both CEP entries.  On a batch ``ev`` it
+    is one hash aggregate.  On a streaming ``ev`` the same aggregate
+    runs as a JVM-side streaming aggregation (update mode) over a
+    bounded replay whose keys each end with a sentinel row
+    (``event_id == -1``, ``ts`` inside the key's day):
+
+    - a watermark on ``ts`` and ``window(ts, "1 day")`` among the keys
+      evict a closed day's state (session timezone is UTC, so the
+      window and the ``day`` label name the same day);
+    - sentinels are left out of the count and the list;
+    - a ``max`` over the sentinel test flags a closed key, and only
+      flagged groups are emitted, once each with the key's full
+      sequence, however many micro-batches carried its rows.
+
+    Sentinels are masked inside the aggregate, never filtered before
+    it: a filter ahead of the watermark would be pushed into the scan
+    and the watermark would stop advancing."""
+    streaming = ev.isStreaming
+    keys = ["user_id", F.date_format("ts", "yyyy-MM-dd").alias("day")]
+    real = F.lit(True)
+    flag = []
+    if streaming:
+        ev = ev.withWatermark("ts", _CEP_LATENESS)
+        keys.append(F.window("ts", "1 day"))
+        real = F.col("event_id") != -1
+        flag = [F.max(~real).alias("closed")]
+    grouped = ev.groupBy(*keys).agg(
+        F.count(F.when(real, 1)).alias("n_events"),
         F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "event_type"))
+            F.collect_list(
+                F.when(real, F.struct("ts", "event_id", "event_type"))
+            )
         ).alias("evs"),
+        *flag,
     )
+    if streaming:
+        grouped = grouped.where("closed")
     seq = F.array_join(
         F.transform(F.col("evs"), lambda s: F.substring(s["event_type"], 1, 1)),
         "",
@@ -395,6 +427,15 @@ def q_cep_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_patterns"),
         F.md5(seq).alias("seq_md5"),
     )
+
+
+def q_cep_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Complex-event-processing pattern detection over the batch events
+    table (:func:`cep_sequences`).  One shuffle (the group key); the
+    regex scan is row-local codegen.  At 100 TB the group is bounded
+    by a user-day; the streaming twin ``stream_cep_pattern`` runs the
+    same expression incrementally."""
+    return cep_sequences(load_table(spark, sf_dir, "events"))
 
 
 SQL_CEP_PATTERN_MATCH = """
@@ -570,67 +611,60 @@ LIMIT {_SEARCH_K}
 # ------------------------------------------ streaming CEP (stateful)
 
 
+def cep_sentinels(ev: DataFrame) -> DataFrame:
+    """One end-of-key row per (user, day) of ``ev`` for a bounded
+    replay into :func:`cep_sequences`.  Its ``ts`` is the last
+    microsecond of the key's day, so it always lands in its key's
+    window: a sentinel a fixed step past the key's last event crosses
+    midnight when that event is in the day's final moments, closes an
+    empty key in the next day's window, and leaves the real one
+    unemitted."""
+    keys = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
+    return keys.select(
+        "user_id",
+        F.timestamp_micros(
+            F.unix_micros(F.date_add("day", 1).cast("timestamp")) - 1
+        ).alias("ts"),
+        F.lit(-1).cast("long").alias("event_id"),
+        F.lit("~sentinel").alias("event_type"),
+    )
+
+
 def q_stream_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CEP pattern matcher as a REAL stream: file source ->
-    ``applyInPandasWithState`` (per-(user, day) sequence state carried
-    across micro-batches) -> memory sink.  Per-key sentinels (the
-    bounded-replay end-of-key marker, same construction as
-    ``stream_session_stateful``) flush each key exactly once; the
-    emitted rows are byte-identical to the batch ``cep_pattern_match``
-    result, so this entry shares its oracle — the streaming state
-    machinery itself is what is under test."""
+    :func:`cep_sequences` as a streaming aggregation (per-(user, day)
+    state carried across micro-batches, evicted by the watermark) ->
+    memory sink.  Per-key sentinels (the bounded-replay end-of-key
+    marker, as in ``stream_session_stateful``) close each key exactly
+    once; the emitted rows are byte-identical to the batch
+    ``cep_pattern_match`` result, so this entry shares its oracle —
+    the streaming state machinery itself is what is under test."""
     import uuid as _uuid
 
     from event_streaming_toy_example_spark.plans.queries_ext import (
+        await_or_raise,
         stage_stream_input,
-    )
-    from event_streaming_toy_example_spark.streaming.stateful import (
-        cep_stateful,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        "ts",
-        "event_id",
-        "event_type",
+        "user_id", "ts", "event_id", "event_type"
     )
-    sentinels = (
-        ev.groupBy("user_id", "day")
-        .agg(F.max(F.unix_micros("ts")).alias("mx"))
-        .select(
-            "user_id",
-            "day",
-            F.timestamp_micros(F.col("mx") + 1_000_000).alias("ts"),
-            F.lit(-1).cast("long").alias("event_id"),
-            F.lit("~sentinel").alias("event_type"),
-        )
+    staged = stage_stream_input(
+        ev.unionAll(cep_sentinels(ev)), "cep_eod", sf_dir
     )
-    staged = stage_stream_input(ev.unionAll(sentinels), "cep", sf_dir)
     stream = spark.readStream.schema(
-        "user_id bigint, day string, ts timestamp, "
-        "event_id bigint, event_type string"
+        "user_id bigint, ts timestamp, event_id bigint, event_type string"
     ).parquet(staged)
     name = f"stream_cep_{_uuid.uuid4().hex[:8]}"
-    # deliberately NOT under stream_tuning(): this stream's micro-batch
-    # is Python-compute-bound (per-(user,day) sequence evaluation over
-    # the full event table), so it needs the batch shuffle width for
-    # worker parallelism — measured 15.0 s at 32 partitions vs 24.1 s
-    # at 8 (streaming/tuning.py module table, round 12)
     q = (
-        cep_stateful(stream, day_col="day")
+        cep_sequences(stream)
         .writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
+        .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
-    # a timed-out stream would leave the memory sink partially filled —
-    # raise instead of silently returning incomplete rows (same
-    # contract as q_stream_watermark_flush below)
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_cep_pattern did not finish in 300 s")
+    await_or_raise(q, "stream_cep_pattern")
     return spark.table(name)
 
 

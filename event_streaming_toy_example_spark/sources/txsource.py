@@ -195,9 +195,7 @@ class TxTableReader(DataSourceReader):
         if snap is None:
             return [_FilePartition(self.path, "", None, "")]  # no table
         if clauses:
-            files, _skip = tx.prune_files(
-                self.path, clauses, snap.version
-            )
+            files, _skip = tx.prune_files(self.path, clauses, snap=snap)
         else:
             files = list(snap.files)
         if not files:

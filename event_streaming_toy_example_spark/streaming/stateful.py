@@ -1,4 +1,5 @@
-"""Custom stateful streaming operators (``applyInPandasWithState``).
+"""Custom stateful streaming operators (``applyInPandasWithState`` and
+``transformWithStateInPandas``).
 
 The reference has exactly one stateful construct — the external Redis
 dedup set (``toy_lambda_function.py:48-52``); Spark's built-ins cover
@@ -8,6 +9,9 @@ sessionization with explicit state transitions, the canonical
 "operator Spark's declarative API cannot express" (built-in
 ``session_window`` aggregates whole sessions; this emits each *closed*
 session incrementally and carries open sessions across micro-batches).
+State that a built-in aggregate can carry does not belong here: the
+streaming CEP matcher is the batch matcher's aggregate run as a
+JVM-side streaming aggregation (``plans/queries_ext17.cep_sequences``).
 
 Scale design: state is one fixed-width row per key (3 longs), hash
 partitioned by the group key — state-store size is O(active keys), not
@@ -124,136 +128,6 @@ def sessionize_stateful(
         _session_fn_factory(gap_us),
         outputStructType=SESSION_OUTPUT_SCHEMA,
         stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --------------------------------------------------------------------------
-# Streaming CEP: cross-batch event-sequence pattern detection
-# --------------------------------------------------------------------------
-
-CEP_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("day", StringType()),
-        StructField("n_events", LongType()),
-        StructField("n_patterns", LongType()),
-        StructField("seq_md5", StringType()),
-    ]
-)
-
-#: the per-key accumulated type-initial sequence tail.
-CEP_STATE_SCHEMA = StructType([StructField("seq", StringType())])
-
-
-def _cep_fn_factory(pattern: str):
-    """Per-(user, day) transition function: append each batch's sorted
-    type initials to the state string; a sentinel row (event_id == -1)
-    closes the key — count non-overlapping regex matches, bind the
-    full sequence by md5, emit once, drop state.
-
-    The body is numpy, not pandas (VERDICT r12 item 1 / guide §4.3):
-    groups here are tiny (~3.5 rows per (user, day) at sf0.1) and the
-    function runs once per group — 40k times per micro-batch — so
-    per-call pandas overhead (concat + mergesort DataFrame sort + .str
-    accessor) dominated the entry.  ``np.lexsort`` over the two key
-    arrays is the same stable (ts_us, event_id) order; event_id is
-    unique so the order is total either way."""
-    import hashlib
-    import re
-
-    import numpy as np
-
-    rx = re.compile(pattern)
-    # yielding one row per flushed key, 40k times per batch: a fresh
-    # pd.DataFrame([...], columns=...) costs ~280µs; copying a typed
-    # 1-row template and writing cells via .iat costs ~110µs (measured,
-    # round 13) — same blocks, same dtypes, 2.5x cheaper
-    out_template = pd.DataFrame(
-        [(0, "", 0, 0, "")], columns=[f.name for f in CEP_OUTPUT_SCHEMA.fields]
-    )
-
-    def fn(
-        key: tuple[Any, ...],
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        chunks = list(pdf_iter)
-        rows = chunks[0] if len(chunks) == 1 else pd.concat(
-            chunks, ignore_index=True
-        )
-        ts = rows["ts_us"].to_numpy()
-        eid = rows["event_id"].to_numpy()
-        order = np.lexsort((eid, ts))
-        eid = eid[order]
-        real = eid != -1
-        # vectorized: the sentinel sorts last (max ts), so appending all
-        # real initials in sorted order is exactly the per-row walk
-        seq = ("" if not state.exists else state.get[0]) + "".join(
-            rows["initial"].to_numpy()[order][real]
-        )
-        if not real.all():  # sentinel present: flush
-            state.remove()
-            out = out_template.copy()
-            out.iat[0, 0] = int(key[0])
-            out.iat[0, 1] = str(key[1])
-            out.iat[0, 2] = len(seq)
-            out.iat[0, 3] = len(rx.findall(seq))
-            out.iat[0, 4] = hashlib.md5(seq.encode()).hexdigest()
-            yield out
-        else:
-            state.update((seq,))
-
-    return fn
-
-
-def cep_stateful(
-    events: DataFrame,
-    pattern: str = "v[ce]*p",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-    day_col: str | None = None,
-) -> DataFrame:
-    """Streaming complex-event-processing: per (user, day), accumulate
-    the ordered type-initial sequence ACROSS micro-batches and, when
-    the key's sentinel arrives (``event_id == -1``), emit the
-    non-overlapping ``pattern`` match count plus the md5 of the full
-    sequence — byte-identical to the batch ``cep_pattern_match``
-    entry, which is its oracle.
-
-    Scale design: state is one string per active (user, day), bounded
-    by that key's daily activity and dropped at flush — at 100 TB
-    you would carry the pattern DFA's counters plus a rolling hash
-    instead of the raw tail when sequences are long; the string keeps
-    the md5 binding bit-identical to the batch oracle here.  The
-    sentinel is the standard end-of-key marker for bounded replays; an
-    unbounded deployment would use event-time timeouts
-    (``GroupStateTimeout.EventTimeTimeout``) to flush idle keys
-    instead.  ``day_col`` lets callers attach the grouping day
-    explicitly (sentinel rows must key to the SAME day as the events
-    they flush; deriving their day from a bumped timestamp could
-    cross midnight)."""
-    day = (
-        F.col(day_col) if day_col else F.date_format(ts_col, "yyyy-MM-dd")
-    )
-    # only the type INITIAL crosses the Python boundary: the substring
-    # runs in whole-stage codegen and the Arrow batches carry 1-char
-    # strings instead of full type names (guide §4.1 — pass only the
-    # columns, and bytes, the function needs)
-    prepped = events.select(
-        F.col(user_col).alias("user_id"),
-        day.alias("day"),
-        F.unix_micros(F.col(ts_col)).alias("ts_us"),
-        F.col(id_col).alias("event_id"),
-        F.substring(F.col(type_col), 1, 1).alias("initial"),
-    )
-    return prepped.groupBy("user_id", "day").applyInPandasWithState(
-        _cep_fn_factory(pattern),
-        outputStructType=CEP_OUTPUT_SCHEMA,
-        stateStructType=CEP_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -36,12 +36,17 @@ Narrowing the width still pays after the manager switch (1.8x on
 ``stream_join_outer``), so the per-store cost is smaller but not gone.
 
 An earlier measurement under the default manager (local[32], the
-same 32 and 8 widths) showed the limit of narrowing:
-``stream_cep_pattern`` ran 15.0 s at 32 and 24.1 s at 8, a regression.
-That is the design constraint: entries whose micro-batch work is
+same 32 and 8 widths) showed the limit of narrowing: the CEP stream,
+then an ``applyInPandasWithState`` transition over 40k (user, day)
+groups, ran 15.0 s at 32 and 24.1 s at 8, a regression.  That is the
+design constraint: entries whose micro-batch work is
 Python-compute-bound (``applyInPandasWithState`` over many/large
-groups) need the full batch width for worker parallelism, so they do
-not enter :func:`stream_tuning` at all.
+groups, e.g. ``stream_session_stateful``) need the full batch width
+for worker parallelism, so they do not enter :func:`stream_tuning` at
+all.  ``stream_cep_pattern`` is now a built-in streaming aggregation
+with no Python in it; at sf0.1 on 4 cores it measured 3.04 s inside
+:func:`stream_tuning` and 2.98 s outside, which is noise, so it
+stays outside.
 
 Sizing is scale-adaptive, never a local constant: the default is
 ``max(4, defaultParallelism // 4)`` — it grows with the cluster (250

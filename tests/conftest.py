@@ -40,6 +40,11 @@ _FAST_OVERRIDES: dict[str, str] = {}
 _FAST_EXTRAS: set[tuple[str, str]] = {
     # the merge-on-read DV-or-drop step every row-level DML op shares
     ("test_txtable_dv.py", "test_mor_delete_fully_dead_file_drops_whole"),
+    # the CEP aggregate that the batch and streaming entries share
+    (
+        "test_streaming.py",
+        "test_cep_stream_matches_batch_across_micro_batches",
+    ),
 }
 
 

@@ -612,3 +612,88 @@ def test_checkpoint_from_default_manager_restarts_exactly_once(spark, tmp_path):
     assert staged.count() == 250
     assert per_event.count() == 250
     assert per_event.where(F.col("count") != 1).count() == 0
+
+
+def test_cep_stream_matches_batch_across_micro_batches(spark, tmp_path):
+    """The CEP aggregate run as a stream over four micro-batches (real
+    events in the two earlier files, the keys' sentinels in the two
+    later ones) emits exactly the batch call's rows: state carries
+    across batches, every key closes once, and no row is late — the
+    (1, 2024-03-01) key's last event sits in its day's final second,
+    where a sentinel past that event would land in the next day."""
+    import os
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from event_streaming_toy_example_spark.plans.queries_ext17 import (
+        cep_sentinels,
+        cep_sequences,
+    )
+
+    def _ev(rows):
+        return spark.createDataFrame(
+            rows, "user_id bigint, ts_s string, event_id bigint, event_type string"
+        ).select(
+            "user_id",
+            F.col("ts_s").cast("timestamp").alias("ts"),
+            "event_id",
+            "event_type",
+        )
+
+    early = _ev([
+        (1, "2024-03-01 08:00:00", 1, "view"),
+        (1, "2024-03-01 08:01:00", 2, "click"),
+        (2, "2024-03-01 09:00:00", 3, "view"),
+    ])
+    late = _ev([
+        (1, "2024-03-01 08:02:00", 4, "purchase"),
+        (1, "2024-03-01 23:59:59.5", 5, "view"),
+        (2, "2024-03-01 09:05:00", 6, "error"),
+        (2, "2024-03-01 09:06:00", 7, "purchase"),
+        (1, "2024-03-02 10:00:00", 8, "view"),
+        (1, "2024-03-02 10:00:01", 9, "purchase"),
+        (3, "2024-03-02 11:00:00", 10, "click"),
+    ])
+    events = early.unionAll(late)
+    sentinels = cep_sentinels(events)
+    day2 = F.col("ts") >= F.lit("2024-03-02").cast("timestamp")
+    src = tmp_path / "in"
+    src.mkdir()
+    waves = [early, late, sentinels.where(~day2), sentinels.where(day2)]
+    for i, wave in enumerate(waves):
+        wave.coalesce(1).write.parquet(str(tmp_path / f"w{i}"))
+        (part,) = (tmp_path / f"w{i}").glob("part-*.parquet")
+        dst = src / f"{i}.parquet"
+        part.rename(dst)
+        # the file source picks files oldest-first by mtime
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    stream = (
+        spark.readStream.schema(
+            "user_id bigint, ts timestamp, event_id bigint, event_type string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    name = f"cep_mb_{uuid.uuid4().hex[:6]}"
+    q = (
+        cep_sequences(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    progress = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(progress) >= 2
+    assert sum(
+        op.numRowsDroppedByWatermark for p in progress for op in p.stateOperators
+    ) == 0
+
+    got = sorted(tuple(r) for r in spark.table(name).collect())
+    want = sorted(tuple(r) for r in cep_sequences(events).collect())
+    assert len(want) == 4
+    assert got == want
